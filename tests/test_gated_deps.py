@@ -1,16 +1,12 @@
-"""The optional-dependency lane (round-11 VERDICT #6): real-path tests
-for the env-gated trio — psycopg2 (live PostgreSQL upsert, the
-reference's actual sink), delta-spark (ACID MERGE backend), and the
-media codecs (Pillow/soundfile — those live in test_multimodal.py,
-marked ``gated`` there). Each test skip-reports loudly when its
-dependency (or live endpoint) is absent, so this container shows
-skips while a fully-provisioned host runs the real paths:
+"""The optional-dependency lane: real-path tests for the env-gated
+pair — psycopg2 (live PostgreSQL upsert, the reference's actual sink)
+and the media codecs (Pillow/soundfile — those live in
+test_multimodal.py, marked ``gated`` there). Each test skip-reports
+loudly when its dependency (or live endpoint) is absent, so a host
+without them shows skips while a fully-provisioned host runs the real
+paths:
 
     python -m pytest -m gated tests/ -rs
-
-Run the lane as its OWN pytest invocation: the delta test needs a
-SparkSession built with the Delta SQL extension, which cannot be
-retrofitted onto a JVM already started by the shared fixture.
 """
 
 from __future__ import annotations
@@ -18,23 +14,6 @@ from __future__ import annotations
 import os
 
 import pytest
-
-
-def test_delta_merge_import_error_is_actionable():
-    """Runnable everywhere: without delta-spark the adapter must raise
-    an ImportError that names the extra, not an AttributeError from a
-    half-imported module."""
-    pytest.importorskip("pyspark")
-    try:
-        import delta  # noqa: F401
-
-        pytest.skip("delta-spark installed; the real-path test covers this")
-    except ImportError:
-        pass
-    from usajobs_etl_service_spark.sinks.delta_merge import delta_merge_upsert
-
-    with pytest.raises(ImportError, match=r"\[delta\]"):
-        delta_merge_upsert("/tmp/nonexistent", None, ["k"])
 
 
 @pytest.mark.gated
@@ -71,45 +50,3 @@ def test_pg_live_upsert_roundtrip():
     finally:
         cur.execute("DROP TABLE IF EXISTS gated_upsert_t")
         conn.close()
-
-
-@pytest.mark.gated
-def test_delta_merge_real_path(tmp_path):
-    """Real Delta MERGE: write a base table, merge a batch carrying an
-    in-batch duplicate (first-wins by seq must be resolved BEFORE the
-    MERGE — Delta raises on multiple source matches otherwise), read
-    the table back."""
-    pytest.importorskip("delta")
-    import delta
-    from pyspark.sql import SparkSession
-
-    builder = (
-        SparkSession.builder.master("local[4]")
-        .appName("gated-delta")
-        .config("spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension")
-        .config(
-            "spark.sql.catalog.spark_catalog",
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-        )
-    )
-    spark = delta.configure_spark_with_delta_pip(builder).getOrCreate()
-    if "DeltaSparkSessionExtension" not in (
-        spark.conf.get("spark.sql.extensions", "") or ""
-    ):
-        pytest.skip(
-            "JVM session predates the Delta extension; run the gated lane standalone"
-        )
-    from usajobs_etl_service_spark.sinks.delta_merge import delta_merge_upsert
-
-    path = str(tmp_path / "t")
-    spark.createDataFrame([("a", 1), ("b", 2)], "k string, v long").write.format(
-        "delta"
-    ).save(path)
-    batch = spark.createDataFrame(
-        [("b", 20, 2), ("b", 21, 1), ("c", 3, 1)], "k string, v long, seq long"
-    )
-    delta_merge_upsert(path, batch, ["k"], order_col="seq")
-    got = sorted(
-        tuple(r) for r in spark.read.format("delta").load(path).collect()
-    )
-    assert got == [("a", 1), ("b", 21), ("c", 3)]

@@ -1,16 +1,10 @@
 """JDBC upsert writer (SQL generation + batching via fake DB-API
-connection) and snapshot export with retention."""
+connection) and the version store's retention."""
 
 from __future__ import annotations
 
-import time
-
 from usajobs_etl_service_spark.sinks.jdbc import build_upsert_sql, jdbc_upsert, upsert_partition
-from usajobs_etl_service_spark.sinks.snapshot import (
-    list_snapshots,
-    read_latest_snapshot,
-    write_snapshot,
-)
+from usajobs_etl_service_spark.sinks import snapshot
 
 
 class FakeCursor:
@@ -99,16 +93,13 @@ def test_jdbc_upsert_distributed(spark):
     assert stats["updated"] >= 1
 
 
-def test_snapshot_retention(spark, tmp_path):
+def test_snapshot_retention(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(snapshot, "KEEP_LAST", 3)
     base = str(tmp_path / "snaps")
-    df = spark.range(5)
-    paths = []
-    for _ in range(4):
-        paths.append(write_snapshot(df, base, keep_last=3))
-        time.sleep(0.002)
-    snaps = list_snapshots(base)
-    assert len(snaps) == 3  # oldest pruned
-    assert read_latest_snapshot(spark, base).count() == 5
+    names = [snapshot.write_version(spark, base, spark.range(n).write) for n in (1, 2, 3, 4)]
+    assert names == sorted(names) and len(set(names)) == 4  # back-to-back writes never collide
+    assert snapshot.list_versions(spark, base) == names[1:]  # oldest pruned
+    assert spark.read.parquet(snapshot.latest_committed(spark, base)).count() == 4
 
 
 def test_jdbc_upsert_dedups_batch_by_key(spark):
@@ -172,13 +163,12 @@ def test_jdbc_upsert_writes_real_order_column(spark, tmp_path):
     assert extracted == {100}
 
 
-def test_snapshot_retention_with_file_uri(spark, tmp_path):
-    """Snapshot maintenance goes through the Hadoop FS API, so a
+def test_snapshot_retention_with_file_uri(spark, tmp_path, monkeypatch):
+    """Version maintenance goes through the Hadoop FS API, so a
     scheme-qualified URI (file:, and by extension hdfs:/s3a:) works."""
+    monkeypatch.setattr(snapshot, "KEEP_LAST", 2)
     base = "file://" + str(tmp_path / "snaps_uri")
-    df = spark.range(3)
-    for _ in range(3):
-        write_snapshot(df, base, keep_last=2)
-        time.sleep(0.002)
-    assert len(list_snapshots(base)) == 2
-    assert read_latest_snapshot(spark, base).count() == 3
+    for n in (1, 2, 3):
+        snapshot.write_version(spark, base, spark.range(n).write)
+    assert len(snapshot.list_versions(spark, base)) == 2
+    assert spark.read.parquet(snapshot.latest_committed(spark, base)).count() == 3

@@ -50,50 +50,3 @@ def test_merge_invariants(spark, seed):
     }
     for r in merged.filter(F.col("position_uri").isin(list(batch_titles))).collect():
         assert r["position_title"] == batch_titles[r["position_uri"]]
-
-
-def test_merge_upsert_hot_key_protection_identical(spark):
-    """merge_upsert(hot_keys=...) must equal the plain shuffled merge:
-    a base with an 80%-share hot key routes that key's anti-join
-    through the broadcast key-set branch, changing the plan, never the
-    rows. Validations: broadcast_batch=True and composite keys are
-    rejected up front (a silently-ignored knob would fake protection)."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from usajobs_etl_service_spark.sinks.upsert import merge_upsert
-
-    base = spark.range(10_000).select(
-        F.when(F.col("id") % 5 == 0, F.col("id")).otherwise(F.lit(0)).alias("job_id"),
-        F.col("id").alias("payload"),
-    )
-    batch = spark.range(0, 100, 10).select(
-        F.col("id").alias("job_id"), (F.col("id") + 100_000).alias("payload")
-    )
-    plain = sorted(
-        tuple(r)
-        for r in merge_upsert(base, batch, ["job_id"], broadcast_batch=False).collect()
-    )
-    prot = sorted(
-        tuple(r)
-        for r in merge_upsert(
-            base, batch, ["job_id"], broadcast_batch=False, hot_keys=[0]
-        ).collect()
-    )
-    assert prot == plain
-    hk = spark.createDataFrame([(0,)], "key long")
-    lazy = sorted(
-        tuple(r)
-        for r in merge_upsert(
-            base, batch, ["job_id"], broadcast_batch=False, hot_keys_from=hk
-        ).collect()
-    )
-    assert lazy == plain
-    with pytest.raises(ValueError, match="broadcast"):
-        merge_upsert(base, batch, ["job_id"], hot_keys=[0])
-    base2 = base.withColumn("k2", F.lit(1))
-    batch2 = batch.withColumn("k2", F.lit(1))
-    with pytest.raises(ValueError, match="single-key"):
-        merge_upsert(
-            base2, batch2, ["job_id", "k2"], broadcast_batch=False, hot_keys=[0]
-        )

@@ -3,10 +3,14 @@
 
 from __future__ import annotations
 
+import os
+import time
+
 from pyspark.sql import functions as F
 
+from usajobs_etl_service_spark import pipeline as pipeline_mod
 from usajobs_etl_service_spark.pipeline import JobPipeline, PipelineConfig
-from usajobs_etl_service_spark.sources.rest_api import RestPageSource, RetryPolicy
+from usajobs_etl_service_spark.sources.rest_api import RateLimitedError, RestPageSource, RetryPolicy
 
 from tests.test_rest_source import make_page, no_sleep, paged_transport
 
@@ -17,6 +21,17 @@ def _pipeline(spark, tmp_path, pages):
     )
     cfg = PipelineConfig(keyword="data", location=None, max_pages=20, table_path=str(tmp_path / "tbl"))
     return JobPipeline(spark, src, cfg)
+
+
+def _retitled(n: int, suffix: str) -> dict:
+    page = make_page(n, 0, n)
+    for item in page["SearchResult"]["SearchResultItems"]:
+        item["MatchedObjectDescriptor"]["PositionTitle"] += suffix
+    return page
+
+
+def _titles(p) -> dict:
+    return {r[0]: r[1] for r in p.current_table().select("position_uri", "position_title").collect()}
 
 
 def test_first_run_inserts_all(spark, tmp_path):
@@ -35,10 +50,7 @@ def test_second_run_updates_in_place(spark, tmp_path):
         r["position_uri"]: r["created_at"] for r in p.current_table().select("position_uri", "created_at").collect()
     }
     # same URIs, changed titles -> all updates, count stable
-    pages2 = [make_page(5, 0, 5)]
-    for item in pages2[0]["SearchResult"]["SearchResultItems"]:
-        item["MatchedObjectDescriptor"]["PositionTitle"] += " II"
-    p2 = _pipeline(spark, tmp_path, pages2)
+    p2 = _pipeline(spark, tmp_path, [_retitled(5, " II")])
     m2 = p2.run()
     assert (m2.inserted, m2.updated) == (0, 5)
     tbl = p2.current_table()
@@ -72,11 +84,77 @@ def test_statistics_readback(spark, tmp_path):
 
 
 def test_failed_run_logged_not_raised(spark, tmp_path):
-    def explode(params):
+    calls = []
+
+    def rate_limited(params):
+        calls.append(params)
         raise RateLimitedError("429")
 
     p = _pipeline(spark, tmp_path, [])
-    p.source.transport = explode
+    p.source.transport = rate_limited
     m = p.run()
+    assert len(calls) == 1  # a 429 aborts the scan: no retry, no next page
     assert m.status == "success"  # rate-limit abort yields empty scan, not failure
     assert m.jobs_extracted == 0
+
+
+# -- fault injection: a table version is visible only after it commits ----
+
+
+def _version_dir(tmp_path, ahead_ms: int) -> str:
+    """A ``v=`` directory name newer than anything written so far."""
+    return str(tmp_path / "tbl" / f"v={int(time.time() * 1000) + ahead_ms}")
+
+
+def test_empty_version_dir_is_not_the_table(spark, tmp_path):
+    """A crashed write that left an empty version directory must not
+    break later runs (it used to fail them with UNABLE_TO_INFER_SCHEMA)."""
+    _pipeline(spark, tmp_path, [make_page(4, 0, 4)]).run()
+    os.makedirs(_version_dir(tmp_path, 60_000))
+    p = _pipeline(spark, tmp_path, [_retitled(4, " II")])
+    m = p.run()
+    assert m.status == "success", m.errors
+    assert (m.inserted, m.updated) == (0, 4)
+    assert sorted(_titles(p).values()) == [f"Data Engineer {i} II" for i in range(4)]
+
+
+def test_uncommitted_version_is_not_the_base(spark, tmp_path):
+    """A version holding part of the rows but no ``_SUCCESS`` is neither
+    read nor merged into: the next run keeps every committed row, and
+    the crashed directory is pruned once a newer version commits."""
+    p = _pipeline(spark, tmp_path, [make_page(5, 0, 5)])
+    p.run()
+    partial = _version_dir(tmp_path, 60_000)
+    p.current_table().limit(2).write.parquet(partial)
+    os.remove(os.path.join(partial, "_SUCCESS"))
+    p2 = _pipeline(spark, tmp_path, [make_page(2, 5, 2)])
+    m = p2.run()
+    assert (m.status, m.inserted, m.updated) == ("success", 2, 0)
+    assert sorted(_titles(p2)) == sorted(f"https://www.usajobs.gov/job/{i}" for i in range(7))
+    assert not os.path.exists(partial)
+
+
+def test_clock_step_back_keeps_new_version_current(spark, tmp_path, monkeypatch):
+    _pipeline(spark, tmp_path, [make_page(3, 0, 3)]).run()
+    real_time = time.time
+    monkeypatch.setattr(time, "time", lambda: real_time() - 3600)
+    p = _pipeline(spark, tmp_path, [_retitled(3, " II")])
+    assert p.run().status == "success"
+    assert sorted(_titles(p).values()) == [f"Data Engineer {i} II" for i in range(3)]
+
+
+def test_failed_write_leaves_table_unchanged(spark, tmp_path, monkeypatch):
+    p = _pipeline(spark, tmp_path, [make_page(3, 0, 3)])
+    p.run()
+    before = _titles(p)
+    real_merge = pipeline_mod.merge_upsert
+
+    def merge_that_fails_on_write(*args, **kwargs):
+        # a row-level failure: the write job starts, then its tasks raise
+        return real_merge(*args, **kwargs).filter(F.assert_true(F.col("position_uri").isNull()).isNull())
+
+    monkeypatch.setattr(pipeline_mod, "merge_upsert", merge_that_fails_on_write)
+    p2 = _pipeline(spark, tmp_path, [_retitled(3, " II")])
+    m = p2.run()
+    assert m.status == "failed"
+    assert _titles(p2) == before

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from usajobs_etl_service_spark.operators.dedup import dedup_first_wins
 from usajobs_etl_service_spark.operators.stats import summary_stats
 from usajobs_etl_service_spark.schemas import JOB_POSTING_SCHEMA
+from usajobs_etl_service_spark.sinks import snapshot
 from usajobs_etl_service_spark.sinks.upsert import merge_upsert, upsert_stats
 from usajobs_etl_service_spark.sources.rest_api import RestPageSource, scan_to_dataframe
 
@@ -57,11 +58,12 @@ class RunMetrics:
 
 
 class JobPipeline:
-    """Scan -> flatten -> dedup -> upsert -> stats, on parquet snapshots.
+    """Scan -> flatten -> dedup -> upsert -> stats, on a versioned parquet table.
 
-    The table is stored as date-partitioned parquet snapshots; each run
-    merges and writes a new snapshot version (S9-style), so readers are
-    never blocked and a bad run is a one-line rollback.
+    The table is stored as date-partitioned parquet versions in the
+    ``sinks/snapshot`` store; each run merges and writes a new version,
+    which readers see only once it commits, so readers are never blocked
+    and a failed run leaves the table as it was.
     """
 
     def __init__(self, spark: SparkSession, source: RestPageSource, config: PipelineConfig | None = None):
@@ -71,33 +73,25 @@ class JobPipeline:
 
     # -- storage ------------------------------------------------------------
 
-    def _versions(self) -> list[str]:
-        # Hadoop FS listing, not os.listdir: the table path may live on
-        # any Spark-writable filesystem (file:, hdfs:, s3a:, ...)
-        from usajobs_etl_service_spark.fs import list_dir
-
-        return sorted(d for d in list_dir(self.config.table_path, self.spark) if d.startswith("v="))
-
     def current_table(self) -> DataFrame:
-        versions = self._versions()
-        if not versions:
-            empty = self.spark.createDataFrame([], JOB_POSTING_SCHEMA)
-            return empty
-        df = self.spark.read.parquet(os.path.join(self.config.table_path, versions[-1]))
+        path = snapshot.latest_committed(self.spark, self.config.table_path)
+        if path is None:
+            return self.spark.createDataFrame([], JOB_POSTING_SCHEMA)
+        df = self.spark.read.parquet(path)
         return df.drop("ingest_date")  # physical partition column, not part of the logical schema
 
     def _write_version(self, df: DataFrame) -> str:
-        version = f"v={int(time.time() * 1000)}"
-        out = os.path.join(self.config.table_path, version)
         # partition by ingest date: P5-style recency predicates become
         # partition pruning instead of full scans at 100 TB. Bloom filter
         # on the key: URIs are hash-ordered so min/max stats never prune
         # a P7 point lookup; the bloom skips non-matching row groups
         # (~500x fewer rows read — tools/bloom_pruning_demo.py, PLANS.md)
-        df.withColumn("ingest_date", F.to_date("extracted_at")).write.partitionBy(
-            "ingest_date"
-        ).option("parquet.bloom.filter.enabled#position_uri", "true").mode("overwrite").parquet(out)
-        return version
+        writer = (
+            df.withColumn("ingest_date", F.to_date("extracted_at"))
+            .write.partitionBy("ingest_date")
+            .option("parquet.bloom.filter.enabled#position_uri", "true")
+        )
+        return snapshot.write_version(self.spark, self.config.table_path, writer)
 
     # -- run ----------------------------------------------------------------
 

@@ -1,46 +1,76 @@
-"""S9 — versioned snapshot export with retention (the Spark analog of
-the reference's nightly ``pg_dump`` keeping the last 7,
-docker-compose.prod.yml:89-96)."""
+"""S9 — the job table's version store (the Spark analog of the
+reference's nightly ``pg_dump`` keeping the last 7,
+docker-compose.prod.yml:89-96).
+
+This module is the only code that knows the on-disk version format. A
+table path holds one ``v=<id>`` directory per write; ``id`` is a
+13-digit integer, so string order is numeric order. A version is
+visible only after it commits, i.e. once Spark's job commit has written
+its ``_SUCCESS`` marker at the version root (the commit rule of Delta
+Lake, Armbrust et al., PVLDB 13(12), 2020): a crashed or half-written
+directory is never read and never becomes a later run's base.
+
+All listings go through the Hadoop FileSystem API, so the table can
+live on any Spark-writable filesystem (file:, hdfs:, s3a:, ...).
+"""
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrameWriter, SparkSession
 
-from usajobs_etl_service_spark.fs import delete_dir, list_dir
+from usajobs_etl_service_spark.fs import delete_dir, exists, list_dir
 
-
-def write_snapshot(df: DataFrame, base_path: str, *, keep_last: int = 7, partition_by: str | None = None) -> str:
-    """Write a new ``snapshot=<millis>`` directory and prune old ones.
-    Returns the new snapshot path."""
-    tag = f"snapshot={int(time.time() * 1000)}"
-    out = f"{base_path.rstrip('/')}/{tag}"
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(out)
-    prune_snapshots(base_path, keep_last=keep_last)
-    return out
+PREFIX = "v="
+KEEP_LAST = 7  # committed versions kept, as the reference keeps 7 dumps
 
 
-def list_snapshots(base_path: str) -> list[str]:
-    # Hadoop FS listing: snapshots can live on any Spark-writable
-    # filesystem (file:, hdfs:, s3a:, ...), not just the driver's disk
-    return sorted(d for d in list_dir(base_path) if d.startswith("snapshot="))
+def _path(base_path: str, version: str) -> str:
+    return f"{base_path.rstrip('/')}/{version}"
 
 
-def prune_snapshots(base_path: str, *, keep_last: int = 7) -> list[str]:
-    """Drop all but the newest ``keep_last`` snapshots; returns removed tags."""
-    snaps = list_snapshots(base_path)
-    removed = snaps[:-keep_last] if keep_last > 0 else snaps
-    for tag in removed:
-        delete_dir(f"{base_path.rstrip('/')}/{tag}")
-    return removed
+def _committed(spark: SparkSession, base_path: str, version: str) -> bool:
+    return exists(f"{_path(base_path, version)}/_SUCCESS", spark)
 
 
-def read_latest_snapshot(spark: SparkSession, base_path: str) -> DataFrame:
-    snaps = list_snapshots(base_path)
-    if not snaps:
-        raise FileNotFoundError(f"no snapshots under {base_path}")
-    return spark.read.parquet(f"{base_path.rstrip('/')}/{snaps[-1]}")
+def list_versions(spark: SparkSession, base_path: str) -> list[str]:
+    """Every version directory, committed or not, oldest first."""
+    return sorted(d for d in list_dir(base_path, spark) if d.startswith(PREFIX))
+
+
+def latest_committed(spark: SparkSession, base_path: str) -> str | None:
+    """Path of the newest committed version; None if there is none."""
+    for version in reversed(list_versions(spark, base_path)):
+        if _committed(spark, base_path, version):
+            return _path(base_path, version)
+    return None
+
+
+def write_version(spark: SparkSession, base_path: str, writer: DataFrameWriter) -> str:
+    """Save ``writer`` as a new version, then keep the newest
+    ``KEEP_LAST`` committed versions. Returns the new version's name.
+
+    The id is ``max(now_ms, newest_id + 1)``, so a clock step backwards
+    never names a version older than one already on disk.
+    """
+    versions = list_versions(spark, base_path)
+    newest = int(versions[-1][len(PREFIX) :]) if versions else 0
+    version = f"{PREFIX}{max(int(time.time() * 1000), newest + 1)}"
+    writer.mode("overwrite").parquet(_path(base_path, version))
+    _prune(spark, base_path)
+    return version
+
+
+def _prune(spark: SparkSession, base_path: str) -> None:
+    """Drop committed versions beyond the newest ``KEEP_LAST``, and
+    uncommitted directories older than the newest committed one (crashed
+    writes). Newer uncommitted ones may be a write in flight and stay."""
+    versions = list_versions(spark, base_path)
+    committed = [v for v in versions if _committed(spark, base_path, v)]
+    if not committed:
+        return
+    kept = set(committed[-KEEP_LAST:])
+    for version in versions:
+        if version < committed[-1] and version not in kept:
+            delete_dir(_path(base_path, version), spark)

@@ -12,15 +12,10 @@ Semantics preserved from the reference:
 
 Scale shape: the batch is normally orders of magnitude smaller than the
 table, so the batch side is broadcast — the merge is then a scan of the
-base table with a broadcast hash anti-join (no shuffle of the base). If
-the batch is genuinely large, drop the broadcast hint and let AQE pick a
-sort-merge join on the key — and when the BASE carries a degenerate hot
-key (NULL sentinel, crawler default id), pass ``hot_keys``/
-``hot_keys_from`` to route the anti-join through
-``operators/salting.skew_safe_join(how='left_anti')`` so the hot key's
-base rows never concentrate on one reducer. On storage that supports
-it, the same semantics map 1:1 to ``MERGE INTO`` (Delta/Iceberg); this
-module is the engine-native implementation over plain snapshots.
+base table with a broadcast hash anti-join (no shuffle of the base). On
+storage that supports it, the same semantics map 1:1 to ``MERGE INTO``
+(Delta/Iceberg); this module is the engine-native implementation over
+the plain parquet versions of ``sinks/snapshot``.
 """
 
 from __future__ import annotations
@@ -46,9 +41,6 @@ def merge_upsert(
     order_col: str | None = None,
     preserve_cols: list[str] | None = None,
     touch_cols: list[str] | None = None,
-    broadcast_batch: bool = True,
-    hot_keys: list | None = None,
-    hot_keys_from=None,
 ) -> DataFrame:
     """Return the post-merge table: base rows whose key is not in the
     batch, plus the batch (last-writer-wins per key).
@@ -57,13 +49,6 @@ def merge_upsert(
     (reference: ``created_at``). ``touch_cols``: columns refreshed to
     ``current_timestamp()`` on every written row (reference:
     ``updated_at`` via trigger).
-
-    ``hot_keys`` / ``hot_keys_from`` (single-key merges, with
-    ``broadcast_batch=False`` — the shuffled regime is the only one
-    with a reducer to melt): route the base-vs-batch anti-join through
-    ``skew_safe_join(how='left_anti')`` so a degenerate hot key in the
-    100 TB BASE takes the broadcast key-set branch instead of hashing
-    every one of its rows to one task. Results identical (tested).
     """
     b = prepare_batch(batch, key_cols, order_col)
     if order_col is not None and order_col in b.columns:
@@ -77,40 +62,15 @@ def merge_upsert(
         # |batch| rows — never a projection of the 100 TB base table
         keys_b = b.select(*key_cols)
         keep = base.select(*key_cols, *[F.col(c).alias(f"__base_{c}") for c in preserve_cols]).join(
-            F.broadcast(keys_b) if broadcast_batch else keys_b, key_cols, "left_semi"
+            F.broadcast(keys_b), key_cols, "left_semi"
         )
-        b = b.join(F.broadcast(keep) if broadcast_batch else keep, key_cols, "left")
+        b = b.join(F.broadcast(keep), key_cols, "left")
         for c in preserve_cols:
             b = b.withColumn(c, F.coalesce(F.col(f"__base_{c}"), F.col(c))).drop(f"__base_{c}")
     for c in touch_cols:
         b = b.withColumn(c, F.current_timestamp())
 
-    if hot_keys is not None or hot_keys_from is not None:
-        if broadcast_batch:
-            raise ValueError(
-                "hot-key protection targets the SHUFFLED merge (a broadcast "
-                "anti-join never concentrates a key); pass broadcast_batch=False"
-            )
-        if len(key_cols) != 1:
-            raise ValueError(
-                "hot_keys/hot_keys_from supports single-key merges only "
-                f"(got {key_cols}); skew_safe_join is single-key"
-            )
-        from usajobs_etl_service_spark.operators.salting import skew_safe_join
-
-        k = key_cols[0]
-        untouched = skew_safe_join(
-            base,
-            b.select(F.col(k).alias("__batch_key")),
-            left_key=k,
-            right_key="__batch_key",
-            how="left_anti",
-            hot_keys=hot_keys,
-            hot_keys_from=hot_keys_from,
-        )
-    else:
-        b_hint = F.broadcast(b) if broadcast_batch else b
-        untouched = base.join(b_hint.select(*key_cols), key_cols, "left_anti")
+    untouched = base.join(F.broadcast(b).select(*key_cols), key_cols, "left_anti")
     return untouched.unionByName(b.select(*base.columns))
 
 
