@@ -9,6 +9,7 @@ import datetime
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from usajobs_etl_service_spark.sinks.upsert import merge_upsert, prepare_batch, upsert_stats
@@ -57,6 +58,7 @@ def test_merge_model_parity(spark, base_rows, batch_rows):
     assert stats["updated"] == n_overlap
     assert stats["inserted"] == len(batch_model) - n_overlap
 
+    observed = Observation()
     merged = merge_upsert(
         base,
         batch,
@@ -64,8 +66,11 @@ def test_merge_model_parity(spark, base_rows, batch_rows):
         order_col="ingest_seq",
         preserve_cols=["created_at"],
         touch_cols=["updated_at"],
+        observation=observed,
     )
     collected = merged.collect()
+    # the counts observed on the merge's own action equal the oracle's
+    assert observed.get == stats
     rows = {r["position_uri"]: r for r in collected}
 
     # key uniqueness and exact expected key set

@@ -4,12 +4,15 @@
 from __future__ import annotations
 
 import os
+import tempfile
 import time
 
 from pyspark.sql import functions as F
 
 from usajobs_etl_service_spark import pipeline as pipeline_mod
 from usajobs_etl_service_spark.pipeline import JobPipeline, PipelineConfig
+from usajobs_etl_service_spark.schemas import ETL_METADATA_SCHEMA
+from usajobs_etl_service_spark.sinks.upsert import merge_upsert
 from usajobs_etl_service_spark.sources.rest_api import RateLimitedError, RestPageSource, RetryPolicy
 
 from tests.test_rest_source import make_page, no_sleep, paged_transport
@@ -32,6 +35,11 @@ def _retitled(n: int, suffix: str) -> dict:
 
 def _titles(p) -> dict:
     return {r[0]: r[1] for r in p.current_table().select("position_uri", "position_title").collect()}
+
+
+def _merge_failing_on_write(*args, **kwargs):
+    # a row-level failure: the write job starts, then its tasks raise
+    return merge_upsert(*args, **kwargs).filter(F.assert_true(F.col("position_uri").isNull()).isNull())
 
 
 def test_first_run_inserts_all(spark, tmp_path):
@@ -147,14 +155,73 @@ def test_failed_write_leaves_table_unchanged(spark, tmp_path, monkeypatch):
     p = _pipeline(spark, tmp_path, [make_page(3, 0, 3)])
     p.run()
     before = _titles(p)
-    real_merge = pipeline_mod.merge_upsert
-
-    def merge_that_fails_on_write(*args, **kwargs):
-        # a row-level failure: the write job starts, then its tasks raise
-        return real_merge(*args, **kwargs).filter(F.assert_true(F.col("position_uri").isNull()).isNull())
-
-    monkeypatch.setattr(pipeline_mod, "merge_upsert", merge_that_fails_on_write)
+    monkeypatch.setattr(pipeline_mod, "merge_upsert", _merge_failing_on_write)
     p2 = _pipeline(spark, tmp_path, [_retitled(3, " II")])
     m = p2.run()
     assert m.status == "failed"
     assert _titles(p2) == before
+
+
+# -- reruns, spool cleanup and the run log --------------------------------
+
+
+def test_rerun_of_same_pages_is_idempotent(spark, tmp_path):
+    pages = [make_page(5, 0, 8), make_page(3, 5, 8)]
+
+    def rows(p):
+        return sorted(p.current_table().select("position_uri", "position_title", "created_at").collect())
+
+    first = _pipeline(spark, tmp_path, pages)
+    first.run()
+    before = rows(first)
+    again = _pipeline(spark, tmp_path, pages)
+    m = again.run()
+    assert (m.status, m.jobs_extracted) == ("success", 8)
+    assert (m.inserted, m.updated) == (0, m.jobs_extracted)
+    assert rows(again) == before
+
+
+def test_run_deletes_its_spool(spark, tmp_path, monkeypatch):
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmpdir))
+
+    def spools():
+        return [d for d in os.listdir(tmpdir) if d.startswith("rest_spool_")]
+
+    assert _pipeline(spark, tmp_path, [make_page(3, 0, 3)]).run().status == "success"
+    assert spools() == []
+    monkeypatch.setattr(pipeline_mod, "merge_upsert", _merge_failing_on_write)
+    assert _pipeline(spark, tmp_path, [_retitled(3, " II")]).run().status == "failed"
+    assert spools() == []
+
+
+def _spark_run_log_row(spark, log_dir: str, jobs: int) -> None:
+    """A run-log row written by a one-row Spark parquet append, the form
+    of every log file written before the driver-side writer."""
+    spark.createDataFrame([(jobs, "success", None)], "jobs_processed int, status string, error_message string").select(
+        F.current_timestamp().alias("last_run_at"),
+        "jobs_processed",
+        "status",
+        "error_message",
+        F.current_timestamp().alias("created_at"),
+    ).write.mode("append").parquet(log_dir)
+
+
+def test_run_log_reads_back_across_writers(spark, tmp_path, monkeypatch):
+    log_dir = str(tmp_path / "tbl" / "_etl_metadata")
+    _spark_run_log_row(spark, log_dir, 7)
+    assert _pipeline(spark, tmp_path, [make_page(3, 0, 3)]).run().status == "success"
+    monkeypatch.setattr(pipeline_mod, "merge_upsert", _merge_failing_on_write)
+    failed = _pipeline(spark, tmp_path, [_retitled(3, " II")]).run()
+    assert failed.status == "failed"
+    # a crash between write and rename leaves only the temporary name
+    with open(os.path.join(log_dir, "_run-0-torn.parquet.tmp"), "wb") as f:
+        f.write(b"PAR1")
+
+    inferred = spark.read.parquet(log_dir).schema
+    assert [(f.name, f.dataType) for f in inferred] == [(f.name, f.dataType) for f in ETL_METADATA_SCHEMA]
+    rows = sorted(spark.read.schema(ETL_METADATA_SCHEMA).parquet(log_dir).collect(), key=lambda r: r["created_at"])
+    assert [(r["jobs_processed"], r["status"]) for r in rows] == [(7, "success"), (3, "success"), (0, "failed")]
+    assert [r["error_message"] for r in rows] == [None, None, "; ".join(failed.errors)]
+    assert all(r["last_run_at"] == r["created_at"] for r in rows)

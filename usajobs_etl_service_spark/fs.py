@@ -8,7 +8,8 @@ path's own filesystem from the active Hadoop configuration, exactly as
 the executors' writers do.
 
 All calls are O(directory entries) driver-side metadata operations on
-table roots (a handful of version/snapshot dirs), never data reads.
+table roots (a handful of version/snapshot dirs), never data reads;
+``write_file_atomic`` writes one small driver-built file (the run log).
 """
 
 from __future__ import annotations
@@ -60,3 +61,20 @@ def dir_size_bytes(path: str, spark: SparkSession | None = None) -> int:
     if not fs.exists(hpath):
         return 0
     return sum(st.getLen() for st in fs.listStatus(hpath) if st.isFile())
+
+
+def write_file_atomic(path: str, data: bytes, spark: SparkSession | None = None) -> None:
+    """Write ``data`` as the file ``path``: first to a ``_``-prefixed
+    sibling, which Spark's file readers skip, then renamed into place, so
+    a crash never leaves a torn file that readers would pick up."""
+    spark = _active_spark(spark)
+    fs, hpath = _fs_and_path(spark, path)
+    tmp = spark._jvm.org.apache.hadoop.fs.Path(hpath.getParent(), f"_{hpath.getName()}.tmp")
+    out = fs.create(tmp, True)
+    try:
+        out.write(data)
+    finally:
+        out.close()
+    if not fs.rename(tmp, hpath):
+        fs.delete(tmp, False)
+        raise OSError(f"could not rename {tmp.toString()} to {path}")

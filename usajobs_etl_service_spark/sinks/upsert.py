@@ -8,7 +8,9 @@ Semantics preserved from the reference:
   (DO UPDATE list excludes created_at; trigger refreshes updated_at),
 - per-run metrics ``{"inserted", "updated", "total"}`` — the reference
   derives them from the PG ``(xmax = 0)`` trick; here they are the
-  semi/anti-join split of the batch against the table.
+  semi/anti-join split of the batch against the table, either as a
+  query of their own (``merge_metrics``) or observed on the merge's
+  own write (``merge_upsert(observation=...)``).
 
 Scale shape: the batch is normally orders of magnitude smaller than the
 table, so the batch side is broadcast — the merge is then a scan of the
@@ -20,7 +22,7 @@ the plain parquet versions of ``sinks/snapshot``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from usajobs_etl_service_spark.operators.dedup import dedup_first_wins
@@ -41,6 +43,7 @@ def merge_upsert(
     order_col: str | None = None,
     preserve_cols: list[str] | None = None,
     touch_cols: list[str] | None = None,
+    observation: Observation | None = None,
 ) -> DataFrame:
     """Return the post-merge table: base rows whose key is not in the
     batch, plus the batch (last-writer-wins per key).
@@ -48,7 +51,10 @@ def merge_upsert(
     ``preserve_cols``: columns whose base value survives an update
     (reference: ``created_at``). ``touch_cols``: columns refreshed to
     ``current_timestamp()`` on every written row (reference:
-    ``updated_at`` via trigger).
+    ``updated_at`` via trigger). ``observation``: receives
+    ``inserted``/``updated``/``total`` (``upsert_stats``' values) from
+    the action that materializes the result — the reference's
+    ``RETURNING (xmax = 0)`` readback, with no job of its own.
     """
     b = prepare_batch(batch, key_cols, order_col)
     if order_col is not None and order_col in b.columns:
@@ -56,21 +62,31 @@ def merge_upsert(
     preserve_cols = preserve_cols or []
     touch_cols = touch_cols or []
 
-    if preserve_cols:
+    keys_b = b.select(*key_cols)
+    if preserve_cols or observation is not None:
         # prune base to the batch's keys FIRST (broadcast semi-join on the
         # small batch-key set), so what we later broadcast back is at most
         # |batch| rows — never a projection of the 100 TB base table
-        keys_b = b.select(*key_cols)
-        keep = base.select(*key_cols, *[F.col(c).alias(f"__base_{c}") for c in preserve_cols]).join(
-            F.broadcast(keys_b), key_cols, "left_semi"
-        )
+        keep = base.select(
+            *key_cols, *[F.col(c).alias(f"__base_{c}") for c in preserve_cols], F.lit(True).alias("__matched")
+        ).join(F.broadcast(keys_b), key_cols, "left_semi")
         b = b.join(F.broadcast(keep), key_cols, "left")
+        if observation is not None:
+            matched = F.col("__matched").isNotNull()
+            b = b.observe(
+                observation,
+                F.count(F.when(~matched, 1)).alias("inserted"),
+                F.count(F.when(matched, 1)).alias("updated"),
+                F.count(F.lit(1)).alias("total"),
+            )
         for c in preserve_cols:
             b = b.withColumn(c, F.coalesce(F.col(f"__base_{c}"), F.col(c))).drop(f"__base_{c}")
     for c in touch_cols:
         b = b.withColumn(c, F.current_timestamp())
 
-    untouched = base.join(F.broadcast(b).select(*key_cols), key_cols, "left_anti")
+    # anti-join on the batch's key frame, not on ``b``: the observed node
+    # must appear in the plan once
+    untouched = base.join(F.broadcast(keys_b), key_cols, "left_anti")
     return untouched.unionByName(b.select(*base.columns))
 
 
