@@ -636,7 +636,7 @@ def q37_rest_scan_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         transport=transport, page_size=3, max_pages=5,
         retry=RetryPolicy(sleep=lambda s: None), sleep=lambda s: None,
     )
-    flat = scan_to_dataframe(spark, src, "data engineering")
+    flat, _ = scan_to_dataframe(spark, src, "data engineering")
     deduped = dedup_first_wins(flat, ["position_uri"], "ingest_seq")
     return deduped.select(
         "position_title",

@@ -6,6 +6,8 @@ from __future__ import annotations
 import json
 
 from usajobs_etl_service_spark.__main__ import demo_transport, main
+from usajobs_etl_service_spark.sources import rest_api
+from usajobs_etl_service_spark.sources.rest_api import RestPageSource
 
 
 def test_cli_one_shot_success(spark, tmp_path, capsys):
@@ -33,6 +35,31 @@ def test_cli_schedule_loop_runs_n_times(spark, tmp_path, capsys):
     assert rc == 0
     lines = [l for l in capsys.readouterr().out.strip().splitlines() if l.startswith("{")]
     assert len(lines) == 2
+
+
+def test_live_source_waits_between_pages(spark, tmp_path, monkeypatch, capsys):
+    """--base-url pages are 1.5 s apart, the reference's API_DELAY; the
+    demo source does not wait."""
+    urls, sleeps = [], []
+
+    def fake_http_transport(base_url, headers):
+        urls.append(base_url)
+        return demo_transport(total_jobs=25)
+
+    def source_recording_sleeps(**kwargs):  # ten postings a page: three pages
+        return RestPageSource(**kwargs, page_size=10, sleep=sleeps.append)
+
+    monkeypatch.setattr(rest_api, "http_transport", fake_http_transport)
+    monkeypatch.setattr(rest_api, "RestPageSource", source_recording_sleeps)
+    assert main(["--table-path", str(tmp_path / "live"), "--base-url", "https://api.example/search"]) == 0
+    assert urls == ["https://api.example/search"]
+    assert sleeps == [1.5, 1.5]
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert (out["jobs_extracted"], out["api_calls"]) == (25, 3)
+
+    sleeps.clear()
+    assert main(["--table-path", str(tmp_path / "demo"), "--demo-jobs", "25"]) == 0
+    assert sleeps == []
 
 
 def test_demo_transport_paginates_and_exhausts():

@@ -145,7 +145,8 @@ def test_http_500_is_retried_through_real_raise_for_status(api_server):
 
 def test_scan_to_dataframe_end_to_end_over_loopback(spark, api_server, tmp_path):
     src = _source(api_server, page_size=3)
-    df = scan_to_dataframe(spark, src, "data engineer", spool_dir=str(tmp_path / "spool"))
+    df, api_calls = scan_to_dataframe(spark, src, "data engineer", spool_dir=str(tmp_path / "spool"))
+    assert api_calls == 2
     rows = df.collect()
     assert len(rows) == 5
     assert {r["position_title"] for r in rows} == {f"Data Engineer {i}" for i in range(5)}

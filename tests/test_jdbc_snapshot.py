@@ -96,7 +96,7 @@ def test_jdbc_upsert_distributed(spark):
 def test_snapshot_retention(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(snapshot, "KEEP_LAST", 3)
     base = str(tmp_path / "snaps")
-    names = [snapshot.write_version(spark, base, spark.range(n).write) for n in (1, 2, 3, 4)]
+    names = [snapshot.write_version(spark, base, spark.range(n)) for n in (1, 2, 3, 4)]
     assert names == sorted(names) and len(set(names)) == 4  # back-to-back writes never collide
     assert snapshot.list_versions(spark, base) == names[1:]  # oldest pruned
     assert spark.read.parquet(snapshot.latest_committed(spark, base)).count() == 4
@@ -169,6 +169,6 @@ def test_snapshot_retention_with_file_uri(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(snapshot, "KEEP_LAST", 2)
     base = "file://" + str(tmp_path / "snaps_uri")
     for n in (1, 2, 3):
-        snapshot.write_version(spark, base, spark.range(n).write)
+        snapshot.write_version(spark, base, spark.range(n))
     assert len(snapshot.list_versions(spark, base)) == 2
     assert spark.read.parquet(snapshot.latest_committed(spark, base)).count() == 3

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import time
 
@@ -11,7 +12,8 @@ from pyspark.sql import functions as F
 
 from usajobs_etl_service_spark import pipeline as pipeline_mod
 from usajobs_etl_service_spark.pipeline import JobPipeline, PipelineConfig
-from usajobs_etl_service_spark.schemas import ETL_METADATA_SCHEMA
+from usajobs_etl_service_spark.schemas import ETL_METADATA_SCHEMA, JOB_POSTING_SCHEMA
+from usajobs_etl_service_spark.sinks import snapshot
 from usajobs_etl_service_spark.sinks.upsert import merge_upsert
 from usajobs_etl_service_spark.sources.rest_api import RateLimitedError, RestPageSource, RetryPolicy
 
@@ -68,6 +70,24 @@ def test_second_run_updates_in_place(spark, tmp_path):
         r["position_uri"]: r["created_at"] for r in tbl.select("position_uri", "created_at").collect()
     }
     assert created_after == created_before  # created_at preserved on update
+
+
+def test_api_calls_count_pages_that_got_a_response(spark, tmp_path):
+    """Two full pages, one that fails every retry (skipped, not counted),
+    then the partial page that ends the scan."""
+    pages = [make_page(5, 0, 100), make_page(5, 5, 100), None, make_page(2, 15, 100)]
+    serve = paged_transport(pages)
+
+    def transport(params):
+        if pages[params["Page"] - 1] is None:
+            raise ConnectionError("page 3 is down")
+        return serve(params)
+
+    p = _pipeline(spark, tmp_path, [])
+    p.source.transport = transport
+    m = p.run()
+    assert (m.status, m.jobs_extracted) == ("success", 12)
+    assert m.api_calls == 3
 
 
 def test_in_batch_dup_first_wins(spark, tmp_path):
@@ -160,6 +180,79 @@ def test_failed_write_leaves_table_unchanged(spark, tmp_path, monkeypatch):
     m = p2.run()
     assert m.status == "failed"
     assert _titles(p2) == before
+
+
+# -- the table layout: plain parquet, read with its declared schema -----
+
+
+def _bloom_columns(spark, version_dir: str) -> set[str]:
+    """Columns that carry a parquet bloom filter in any file of a version."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    cols = set()
+    for root, _, files in os.walk(version_dir):
+        for name in files:
+            if name.startswith("part-"):
+                footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+                    conf, jvm.org.apache.hadoop.fs.Path(os.path.join(root, name))
+                )
+                for block in footer.getBlocks():
+                    cols |= {c.getPath().toDotString() for c in block.getColumns() if c.getBloomFilterOffset() >= 0}
+    return cols
+
+
+def test_legacy_partitioned_version_reads_back_then_is_rewritten_plain(spark, tmp_path):
+    """A version in the old layout (date-partitioned, bloom filter on the
+    key) is read with the declared columns, and the next run writes a
+    plain version that keeps every key and every preserved created_at."""
+    p = _pipeline(spark, tmp_path, [make_page(5, 0, 5)])
+    p.run()
+    plain = snapshot.latest_committed(spark, p.config.table_path)
+    legacy = _version_dir(tmp_path, 60_000)
+    (
+        p.current_table()
+        .withColumn("extracted_at", F.expr("extracted_at - make_interval(0, 0, 0, int(right(position_uri, 1)))"))
+        .withColumn("ingest_date", F.to_date("extracted_at"))
+        .write.partitionBy("ingest_date")
+        .option("parquet.bloom.filter.enabled#position_uri", "true")
+        .parquet(legacy)
+    )
+    shutil.rmtree(plain)
+    assert len([d for d in os.listdir(legacy) if d.startswith("ingest_date=")]) == 5
+    assert _bloom_columns(spark, legacy) == {"position_uri"}
+
+    tbl = p.current_table()
+    assert [(f.name, f.dataType) for f in tbl.schema] == [(f.name, f.dataType) for f in JOB_POSTING_SCHEMA]
+    created = dict(tbl.select("position_uri", "created_at").collect())
+    assert len(created) == 5
+
+    p2 = _pipeline(spark, tmp_path, [_retitled(3, " II")])
+    m = p2.run()
+    assert (m.status, m.inserted, m.updated) == ("success", 0, 3), m.errors
+    newest = snapshot.latest_committed(spark, p2.config.table_path)
+    assert newest != legacy
+    entries = [e for e in os.scandir(newest) if not e.name.startswith(".")]
+    assert not any(e.is_dir() for e in entries)
+    assert all(e.name.startswith("part-") or e.name == "_SUCCESS" for e in entries)
+    assert _bloom_columns(spark, newest) == set()
+    rows = p2.current_table().select("position_uri", "position_title", "created_at").collect()
+    assert {r[0]: r[2] for r in rows} == created
+    assert sorted(r[1] for r in rows if r[1].endswith(" II")) == [f"Data Engineer {i} II" for i in range(3)]
+
+
+def test_current_table_starts_no_spark_job(spark, tmp_path):
+    p = _pipeline(spark, tmp_path, [make_page(3, 0, 3)])
+    assert p.run().status == "success"
+    sc = spark.sparkContext
+    group = "open_current_table"
+    sc.setJobGroup(group, "opening the table must run no job")
+    try:
+        tbl = p.current_table()
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert tbl.count() == 3
+        assert sc.statusTracker().getJobIdsForGroup(group) != []  # the group does see jobs
+    finally:
+        sc.setJobGroup("", "")
 
 
 # -- reruns, spool cleanup and the run log --------------------------------

@@ -13,6 +13,7 @@ from usajobs_etl_service_spark.sources.rest_api import (
     RestPageSource,
     RetryPolicy,
     scan_to_dataframe,
+    spool_pages_to_json,
 )
 
 
@@ -88,6 +89,10 @@ class TestPagination:
         list(src.fetch_pages("data"))
         assert t.calls[0]["ResultsPerPage"] == 500
 
+    def test_spool_counts_every_response(self, tmp_path):
+        src = _source(paged_transport([make_page(5, 0, 100), make_page(5, 5, 100)]), page_size=5)
+        assert spool_pages_to_json(src, str(tmp_path), "data") == (2, 3)  # the empty page 3 ends the scan
+
     def test_pushdown_params(self):
         t = paged_transport([make_page(1)])
         src = _source(t)
@@ -152,7 +157,8 @@ class TestScanToDataFrame:
     def test_end_to_end(self, spark, tmp_path):
         t = paged_transport([make_page(5, 0, 8), make_page(3, 5, 8)])
         src = _source(t, page_size=5)
-        df = scan_to_dataframe(spark, src, "data", spool_dir=str(tmp_path / "spool"))
+        df, api_calls = scan_to_dataframe(spark, src, "data", spool_dir=str(tmp_path / "spool"))
+        assert api_calls == 2
         rows = df.collect()
         assert len(rows) == 8
         uris = {r["position_uri"] for r in rows}
@@ -163,8 +169,9 @@ class TestScanToDataFrame:
 
     def test_empty_scan(self, spark, tmp_path):
         src = _source(paged_transport([]))
-        df = scan_to_dataframe(spark, src, "data", spool_dir=str(tmp_path / "spool"))
-        assert df.count() == 0
+        df, api_calls = scan_to_dataframe(spark, src, "data", spool_dir=str(tmp_path / "spool"))
+        assert (df.count(), api_calls) == (0, 1)
+        assert "ingest_seq" in df.columns  # the columns dedup needs, as on a non-empty scan
 
 
 class TestSpoolCompaction:

@@ -162,11 +162,11 @@ def main(argv: list[str] | None = None) -> int:
             "Authorization-Key": os.environ.get("USAJOBS_API_KEY", ""),
             "User-Agent": os.environ.get("USAJOBS_USER_AGENT", ""),
         }
-        transport = http_transport(args.base_url, headers)
+        transport, delay = http_transport(args.base_url, headers), 1.5  # reference API_DELAY (etl.py:180)
     else:
-        transport = demo_transport(total_jobs=args.demo_jobs)
+        transport, delay = demo_transport(total_jobs=args.demo_jobs), 0.0
 
-    source = RestPageSource(transport=transport, max_pages=cfg.max_pages)
+    source = RestPageSource(transport=transport, max_pages=cfg.max_pages, delay_seconds=delay)
     pipeline = JobPipeline(spark, source, cfg)
 
     # --interval-seconds alone means "run on a schedule": default the run

@@ -72,7 +72,7 @@ class RunMetrics:
 class JobPipeline:
     """Scan -> flatten -> dedup -> upsert -> stats, on a versioned parquet table.
 
-    The table is stored as date-partitioned parquet versions in the
+    The table is stored as plain parquet versions in the
     ``sinks/snapshot`` store; each run merges and writes a new version,
     which readers see only once it commits, so readers are never blocked
     and a failed run leaves the table as it was.
@@ -86,24 +86,10 @@ class JobPipeline:
     # -- storage ------------------------------------------------------------
 
     def current_table(self) -> DataFrame:
-        path = snapshot.latest_committed(self.spark, self.config.table_path)
-        if path is None:
-            return self.spark.createDataFrame([], JOB_POSTING_SCHEMA)
-        df = self.spark.read.parquet(path)
-        return df.drop("ingest_date")  # physical partition column, not part of the logical schema
+        return snapshot.read_latest(self.spark, self.config.table_path, JOB_POSTING_SCHEMA)
 
     def _write_version(self, df: DataFrame) -> str:
-        # partition by ingest date: P5-style recency predicates become
-        # partition pruning instead of full scans at 100 TB. Bloom filter
-        # on the key: URIs are hash-ordered so min/max stats never prune
-        # a P7 point lookup; the bloom skips non-matching row groups
-        # (~500x fewer rows read — tools/bloom_pruning_demo.py, PLANS.md)
-        writer = (
-            df.withColumn("ingest_date", F.to_date("extracted_at"))
-            .write.partitionBy("ingest_date")
-            .option("parquet.bloom.filter.enabled#position_uri", "true")
-        )
-        return snapshot.write_version(self.spark, self.config.table_path, writer)
+        return snapshot.write_version(self.spark, self.config.table_path, df)
 
     # -- run ----------------------------------------------------------------
 
@@ -114,7 +100,9 @@ class JobPipeline:
         try:
             spool = tempfile.mkdtemp(prefix="rest_spool_")
             base = self.current_table()
-            fresh = scan_to_dataframe(self.spark, self.source, self.config.keyword, self.config.location, spool)
+            fresh, metrics.api_calls = scan_to_dataframe(
+                self.spark, self.source, self.config.keyword, self.config.location, spool
+            )
             fresh = dedup_first_wins(fresh, ["position_uri"], "ingest_seq").drop("ingest_seq")
             # materialized once (at most max_pages x 500 rows), so the write
             # does not recompute spool -> flatten -> dedup. localCheckpoint,

@@ -3,7 +3,7 @@ reference's nightly ``pg_dump`` keeping the last 7,
 docker-compose.prod.yml:89-96).
 
 This module is the only code that knows the on-disk version format. A
-table path holds one ``v=<id>`` directory per write; ``id`` is a
+table path holds one plain parquet ``v=<id>`` directory per write; ``id`` is a
 13-digit integer, so string order is numeric order. A version is
 visible only after it commits, i.e. once Spark's job commit has written
 its ``_SUCCESS`` marker at the version root (the commit rule of Delta
@@ -18,7 +18,8 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrameWriter, SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from usajobs_etl_service_spark.fs import delete_dir, exists, list_dir
 
@@ -47,8 +48,17 @@ def latest_committed(spark: SparkSession, base_path: str) -> str | None:
     return None
 
 
-def write_version(spark: SparkSession, base_path: str, writer: DataFrameWriter) -> str:
-    """Save ``writer`` as a new version, then keep the newest
+def read_latest(spark: SparkSession, base_path: str, schema: StructType) -> DataFrame:
+    """The newest committed version, read with ``schema`` (so no inference
+    job) and without the ``ingest_date`` that partitioned older versions."""
+    path = latest_committed(spark, base_path)
+    if path is None:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(path).drop("ingest_date")
+
+
+def write_version(spark: SparkSession, base_path: str, df: DataFrame) -> str:
+    """Save ``df`` as a new version, then keep the newest
     ``KEEP_LAST`` committed versions. Returns the new version's name.
 
     The id is ``max(now_ms, newest_id + 1)``, so a clock step backwards
@@ -57,7 +67,7 @@ def write_version(spark: SparkSession, base_path: str, writer: DataFrameWriter) 
     versions = list_versions(spark, base_path)
     newest = int(versions[-1][len(PREFIX) :]) if versions else 0
     version = f"{PREFIX}{max(int(time.time() * 1000), newest + 1)}"
-    writer.mode("overwrite").parquet(_path(base_path, version))
+    df.write.mode("overwrite").parquet(_path(base_path, version))
     _prune(spark, base_path)
     return version
 

@@ -13,8 +13,7 @@ Policies (reference parity):
 - retry: 3 attempts, exponential backoff ×2 from 1 s (etl.py:63-93)
 - circuit breaker: CLOSED/OPEN/HALF_OPEN, threshold 5, recovery 60 s
   (etl.py:131-161)
-- rate limit: configurable inter-request delay, default 1.5 s
-  (etl.py:180, 211)
+- rate limit: ``delay_seconds`` between pages, 1.5 s live (etl.py:180, 211)
 - page clamp 500 (etl.py:193); predicate pushdown into query params
   (S2: Keyword/LocationName/Page/ResultsPerPage, etl.py:191-199)
 - termination: empty page, partial page, or count >= count_all
@@ -32,11 +31,10 @@ import json
 import os
 import time
 import uuid
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Generator
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from usajobs_etl_service_spark.sources.ingest import flatten_postings, parse_api_pages
 
@@ -133,9 +131,11 @@ class RestPageSource:
             params["LocationName"] = location
         return params
 
-    def fetch_pages(self, keyword: str, location: str | None = None) -> Iterator[tuple[int, dict]]:
-        """Yield (page_number, payload) until exhaustion (S3)."""
+    def fetch_pages(self, keyword: str, location: str | None = None) -> Generator[tuple[int, dict], None, int]:
+        """Yield (page_number, payload) until exhaustion (S3); return how many
+        requests got a response (a page skipped after its retries did not)."""
         per_page = min(self.page_size, PAGE_SIZE_CAP)
+        responses = 0
         for page in range(1, self.max_pages + 1):
             if page > 1 and self.delay_seconds:
                 self.sleep(self.delay_seconds)  # rate limit (etl.py:211)
@@ -146,6 +146,7 @@ class RestPageSource:
                 break  # stop the scan entirely (etl.py:652-655)
             except Exception:
                 continue  # per-page tolerance: skip this page (etl.py:649-659)
+            responses += 1
             sr = payload.get("SearchResult", {}) if isinstance(payload, dict) else {}
             items = sr.get("SearchResultItems") or []
             if not items:
@@ -157,6 +158,7 @@ class RestPageSource:
                 break  # partial page
             if count_all is not None and page * per_page >= count_all:
                 break  # exhausted
+        return responses
 
 
 def spool_pages_to_json(
@@ -170,15 +172,19 @@ def spool_pages_to_json(
     os.makedirs(spool_dir, exist_ok=True)
     pages = 0
     run_id = uuid.uuid4().hex[:8]
-    for page, payload in source.fetch_pages(keyword, location):
+    scan = source.fetch_pages(keyword, location)
+    while True:
+        try:
+            page, payload = next(scan)
+        except StopIteration as done:
+            return pages, done.value
         with open(os.path.join(spool_dir, f"page-{run_id}-{page:05d}.json"), "w") as f:
             json.dump({"page": page, "payload": json.dumps(payload)}, f)
         pages += 1
-    return pages, pages
 
 
 def read_spool(spark: SparkSession, spool_dir: str) -> DataFrame:
-    """Distributed read of the spool -> flattened canonical postings."""
+    """Distributed read of the spool -> flattened canonical postings (none if empty)."""
     raw = spark.read.schema("page long, payload string").json(spool_dir)
     return flatten_postings(parse_api_pages(raw))
 
@@ -221,20 +227,15 @@ def scan_to_dataframe(
     keyword: str,
     location: str | None = None,
     spool_dir: str | None = None,
-) -> DataFrame:
-    """S1-S4 end-to-end: paginated scan -> spool -> distributed flatten.
-    Without a spool dir, pages go through a local temp dir (still never
-    a whole-run Python list)."""
+) -> tuple[DataFrame, int]:
+    """S1-S4 end-to-end: paginated scan -> spool -> distributed flatten;
+    returns (postings, api_calls). Without a spool dir, pages go through
+    a local temp dir (still never a whole-run Python list)."""
     import tempfile
 
     spool = spool_dir or tempfile.mkdtemp(prefix="rest_spool_")
-    pages, _ = spool_pages_to_json(source, spool, keyword, location)
-    if pages == 0:
-        from usajobs_etl_service_spark.schemas import JOB_POSTING_SCHEMA
-
-        empty = spark.createDataFrame([], JOB_POSTING_SCHEMA)
-        return empty.withColumn("ingest_seq", F.lit(None).cast("long")).drop("created_at", "updated_at")
-    return read_spool(spark, spool)
+    _, api_calls = spool_pages_to_json(source, spool, keyword, location)
+    return read_spool(spark, spool), api_calls
 
 
 def http_transport(base_url: str, headers: dict[str, str], timeout_seconds: float = 30.0):
