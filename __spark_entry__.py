@@ -588,6 +588,9 @@ def q37_rest_scan_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-process REST transport -> paginated scan -> spool -> flatten ->
     first-wins dedup. The oracle is the literal expected output
     (VALUES), so the whole source+transform path is value-checked."""
+    import shutil
+    import tempfile
+
     from usajobs_etl_service_spark.operators.dedup import dedup_first_wins
     from usajobs_etl_service_spark.sources.rest_api import RestPageSource, RetryPolicy, scan_to_dataframe
 
@@ -636,7 +639,11 @@ def q37_rest_scan_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         transport=transport, page_size=3, max_pages=5,
         retry=RetryPolicy(sleep=lambda s: None), sleep=lambda s: None,
     )
-    flat, _ = scan_to_dataframe(spark, src, "data engineering")
+    # one spool dir per process, cleared on each call: the previous call's
+    # pages go, and repeated calls never pile up temp dirs
+    spool = os.path.join(tempfile.gettempdir(), f"q37_spool_{os.getpid()}")
+    shutil.rmtree(spool, ignore_errors=True)
+    flat, _ = scan_to_dataframe(spark, src, "data engineering", spool_dir=spool)
     deduped = dedup_first_wins(flat, ["position_uri"], "ingest_seq")
     return deduped.select(
         "position_title",

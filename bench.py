@@ -560,8 +560,11 @@ def _parse_bench_blob(text: str) -> dict:
         # tail-safe lines — named chunks when all survived, else the
         # compact ms array zipped with the current registry names
         # (md5-of-names guard against a registry drift).
+        # oldest first, so a newer run's chunk overwrites an older one's
         chunks = {
-            d["i"]: d["q"] for d in candidates if d.get("metric") == "per_query_chunk"
+            d["i"]: d["q"]
+            for d in reversed(candidates)
+            if d.get("metric") == "per_query_chunk"
         }
         k = next((d["k"] for d in candidates if d.get("metric") == "per_query_chunk"), None)
         if k is not None and set(chunks) == set(range(k)):

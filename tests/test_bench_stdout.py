@@ -80,8 +80,25 @@ def test_reconstruct_from_named_chunks_without_registry(tmp_path, monkeypatch):
     tail = blob[blob.index('{"metric":"per_query_chunk"') :]
     art = tmp_path / "tail.json"
     art.write_text(json.dumps({"tail": tail}))
+    # the registry cannot be imported, so the per_query_ms fallback fails
+    monkeypatch.setitem(sys.modules, "__spark_entry__", None)
     parsed = bench.load_bench_artifact(str(art))
     assert parsed["queries"] == timings
+
+
+def test_newest_of_two_runs_wins(tmp_path, monkeypatch):
+    """A capture holding two runs' chunk lines gives the newer run's
+    timings (the compact headline is the newer run's too)."""
+    old = _registry_timings()
+    new = {name: round(t + 1.0, 3) for name, t in old.items()}
+    # each run's lines from its first chunk on (the full dict lines dropped)
+    tail = "".join(b[b.index('{"metric":"per_query_chunk"') :] for b in map(_stdout_blob, (old, new)))
+    art = tmp_path / "two_runs.json"
+    art.write_text(json.dumps({"tail": tail}))
+    monkeypatch.setitem(sys.modules, "__spark_entry__", None)
+    parsed = bench.load_bench_artifact(str(art))
+    assert parsed["value"] == round(sum(new.values()), 3)
+    assert parsed["queries"] == new
 
 
 def test_full_line_still_preferred(tmp_path):

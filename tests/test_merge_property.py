@@ -1,7 +1,8 @@
 """Property-based merge/upsert invariants over hypothesis-generated
 batches (VERDICT r1 item 10): key uniqueness, created_at preservation,
-first-wins in-batch dedup, and exact metric sums — all computed against
-a pure-Python model of the reference semantics (etl.py:445-525)."""
+first-wins in-batch dedup (``dedup_first_wins``, applied before the
+merge as the pipeline does), and exact metric sums — all computed
+against a pure-Python model of the reference semantics (etl.py:445-525)."""
 
 from __future__ import annotations
 
@@ -12,7 +13,8 @@ from hypothesis import strategies as st
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
-from usajobs_etl_service_spark.sinks.upsert import merge_upsert, prepare_batch, upsert_stats
+from usajobs_etl_service_spark.operators.dedup import dedup_first_wins
+from usajobs_etl_service_spark.sinks.upsert import merge_upsert, upsert_stats
 
 KEYS = st.integers(min_value=0, max_value=15)  # tight range -> dups + overlap likely
 ROW = st.tuples(KEYS, st.integers(min_value=0, max_value=999))
@@ -45,14 +47,16 @@ def test_merge_model_parity(spark, base_rows, batch_rows):
         .drop("ingest_seq")
     )
 
-    batch = _df(spark, batch_rows, t0=datetime.datetime(2024, 6, 1))
+    batch = dedup_first_wins(
+        _df(spark, batch_rows, t0=datetime.datetime(2024, 6, 1)), ["position_uri"], "ingest_seq"
+    ).drop("ingest_seq")
 
     # model: first occurrence per key wins within the batch (ingest_seq order)
     batch_model: dict[str, str] = {}
     for k, v in batch_rows:
         batch_model.setdefault(f"https://jobs/{k}", f"title-{v}")
 
-    stats = upsert_stats(base, batch, ["position_uri"], order_col="ingest_seq")
+    stats = upsert_stats(base, batch, ["position_uri"])
     n_overlap = len(set(base_model) & set(batch_model))
     assert stats["total"] == len(batch_model)
     assert stats["updated"] == n_overlap
@@ -63,9 +67,7 @@ def test_merge_model_parity(spark, base_rows, batch_rows):
         base,
         batch,
         ["position_uri"],
-        order_col="ingest_seq",
         preserve_cols=["created_at"],
-        touch_cols=["updated_at"],
         observation=observed,
     )
     collected = merged.collect()
@@ -85,8 +87,8 @@ def test_merge_model_parity(spark, base_rows, batch_rows):
                 assert r["created_at"] == EPOCH
             else:
                 assert r["created_at"] == datetime.datetime(2024, 6, 1)
-            # updated_at refreshed on every written row
-            assert r["updated_at"] > datetime.datetime(2024, 6, 1)
+            # updated_at is the batch's own stamp on every written row
+            assert r["updated_at"] == datetime.datetime(2024, 6, 1)
         else:
             assert r["position_title"] == base_model[uri]
             assert r["created_at"] == EPOCH and r["updated_at"] == EPOCH
@@ -94,13 +96,13 @@ def test_merge_model_parity(spark, base_rows, batch_rows):
 
 @given(st.lists(ROW, min_size=1, max_size=30))
 @SET
-def test_prepare_batch_first_wins_model(spark, rows):
+def test_dedup_first_wins_model(spark, rows):
     batch = _df(spark, rows)
     model: dict[str, str] = {}
     for k, v in rows:
         model.setdefault(f"https://jobs/{k}", f"title-{v}")
     got = {
         r["position_uri"]: r["position_title"]
-        for r in prepare_batch(batch, ["position_uri"], "ingest_seq").collect()
+        for r in dedup_first_wins(batch, ["position_uri"], "ingest_seq").collect()
     }
     assert got == model

@@ -12,7 +12,6 @@ from usajobs_etl_service_spark.observability import (
     StructuredFormatter,
     get_structured_logger,
     observe_counts,
-    observe_ingest,
 )
 
 
@@ -29,24 +28,6 @@ def test_structured_log_fields():
     assert rec["message"] == "pipeline started"
     assert set(rec) == {"timestamp", "level", "logger", "message", "module", "function", "line"}
     assert rec["level"] == "INFO"
-
-
-def test_observe_ingest_metrics(spark):
-    df = spark.createDataFrame(
-        [
-            ("T1", "https://x/1", None, "Org A"),
-            ("T2", "https://x/2", "2023-01-01", "Org B"),
-            ("T3", "ftp://bad", None, "Org A"),
-        ],
-        "position_title string, position_uri string, position_start_date string, organization_name string",
-    ).withColumn("position_start_date", F.to_date("position_start_date"))
-    observed, obs = observe_ingest(df)
-    observed.write.format("noop").mode("overwrite").save()
-    got = obs.get
-    assert got["rows"] == 3
-    assert got["valid_uris"] == 2
-    assert got["null_start_dates"] == 2
-    assert got["approx_orgs"] >= 2
 
 
 def test_observe_counts_generic(spark, sf_dir):

@@ -54,22 +54,26 @@ def test_first_run_inserts_all(spark, tmp_path):
 
 
 def test_second_run_updates_in_place(spark, tmp_path):
-    p = _pipeline(spark, tmp_path, [make_page(5, 0, 5)])
+    p = _pipeline(spark, tmp_path, [make_page(5, 0, 8), make_page(3, 5, 8)])
     p.run()
-    created_before = {
-        r["position_uri"]: r["created_at"] for r in p.current_table().select("position_uri", "created_at").collect()
-    }
-    # same URIs, changed titles -> all updates, count stable
+    before = {r["position_uri"]: r for r in p.current_table().collect()}
+    # URIs 0-4 again with changed titles -> all updates, count stable;
+    # URIs 5-7 untouched
     p2 = _pipeline(spark, tmp_path, [_retitled(5, " II")])
     m2 = p2.run()
     assert (m2.inserted, m2.updated) == (0, 5)
     tbl = p2.current_table()
-    assert tbl.count() == 5
+    assert tbl.count() == 8
     assert tbl.filter(F.col("position_title").endswith(" II")).count() == 5
-    created_after = {
-        r["position_uri"]: r["created_at"] for r in tbl.select("position_uri", "created_at").collect()
-    }
-    assert created_after == created_before  # created_at preserved on update
+    after = {r["position_uri"]: r for r in tbl.collect()}
+    assert after.keys() == before.keys()
+    for uri, r in after.items():
+        old = before[uri]
+        assert r["created_at"] == old["created_at"]  # created_at preserved on update
+        if r["position_title"].endswith(" II"):
+            assert r["updated_at"] > old["updated_at"]  # restamped by the run that wrote it
+        else:
+            assert r["updated_at"] == old["updated_at"]  # untouched keys keep both
 
 
 def test_api_calls_count_pages_that_got_a_response(spark, tmp_path):
@@ -109,6 +113,19 @@ def test_statistics_readback(spark, tmp_path):
     assert stats["total_jobs"] == 4
     assert stats["unique_organizations"] == 4  # Department 0..3
     assert stats["jobs_today"] == 4
+
+
+def test_reader_built_before_a_run_keeps_the_old_version(spark, tmp_path):
+    """A frame from ``current_table()`` built before a run still returns
+    exactly the old version's rows after that run commits: versions are
+    immutable, and the store keeps more than one."""
+    _pipeline(spark, tmp_path, [make_page(4, 0, 4)]).run()
+    p = _pipeline(spark, tmp_path, [_retitled(5, " II")])
+    reader = p.current_table().select("position_uri", "position_title")
+    assert p.run().status == "success"
+    old = {r[0]: r[1] for r in reader.collect()}
+    assert old == {f"https://www.usajobs.gov/job/{i}": f"Data Engineer {i}" for i in range(4)}
+    assert sorted(_titles(p).values()) == [f"Data Engineer {i} II" for i in range(5)]
 
 
 def test_failed_run_logged_not_raised(spark, tmp_path):

@@ -174,62 +174,17 @@ class TestScanToDataFrame:
         assert "ingest_seq" in df.columns  # the columns dedup needs, as on a non-empty scan
 
 
-class TestSpoolCompaction:
-    def test_compacted_spool_reads_identically(self, spark, tmp_path):
-        from usajobs_etl_service_spark.sources.rest_api import (
-            RestPageSource,
-            RetryPolicy,
-            compact_spool,
-            read_compacted_spool,
-            read_spool,
-            spool_pages_to_json,
-        )
 
-        src = RestPageSource(
-            transport=paged_transport([make_page(5, 0, 12), make_page(5, 5, 12), make_page(2, 10, 12)]),
-            page_size=5,
-            retry=RetryPolicy(sleep=no_sleep),
-            sleep=no_sleep,
-        )
-        spool = str(tmp_path / "spool")
-        pages, _ = spool_pages_to_json(src, spool, "data")
-        assert pages == 3  # three tiny files
+def test_q37_calls_leave_one_spool_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """q37 spools into one per-process directory, cleared on each call:
+    repeated calls leave one spool dir, not one per call."""
+    import os
+    import tempfile
 
-        out = str(tmp_path / "compacted")
-        n_files = compact_spool(spark, spool, out, target_file_bytes=10**9)
-        assert n_files == 1  # tiny input -> one healthy file
+    import __spark_entry__ as entry
 
-        import os
-
-        parquet_files = [f for f in os.listdir(out) if f.endswith(".parquet")]
-        assert len(parquet_files) == 1
-
-        # extracted_at is current_timestamp() -> volatile between reads
-        orig = read_spool(spark, spool).drop("extracted_at")
-        comp = read_compacted_spool(spark, out).drop("extracted_at")
-        key = lambda r: r["position_uri"]
-        assert sorted(orig.collect(), key=key) == sorted(comp.collect(), key=key)
-
-    def test_target_size_splits_files(self, spark, tmp_path):
-        from usajobs_etl_service_spark.sources.rest_api import (
-            RestPageSource,
-            RetryPolicy,
-            compact_spool,
-            spool_pages_to_json,
-        )
-
-        src = RestPageSource(
-            transport=paged_transport([make_page(50, i * 50, 500) for i in range(10)]),
-            page_size=50,
-            retry=RetryPolicy(sleep=no_sleep),
-            sleep=no_sleep,
-        )
-        spool = str(tmp_path / "spool")
-        spool_pages_to_json(src, spool, "data")
-
-        from usajobs_etl_service_spark.fs import dir_size_bytes
-
-        total = dir_size_bytes(spool, spark)
-        target = max(total // 3, 1)
-        n_files = compact_spool(spark, spool, str(tmp_path / "out"), target_file_bytes=target)
-        assert 3 <= n_files <= 4  # ceil(total/target)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    q37 = entry.queries()["q37_rest_scan_pipeline"]
+    for _ in range(3):
+        assert len(q37(spark, sf_dir).collect()) == 3
+    assert [n for n in os.listdir(tmp_path) if "spool" in n] == [f"q37_spool_{os.getpid()}"]

@@ -58,9 +58,7 @@ def test_merge_preserve_never_broadcasts_base(spark, sf_dir):
 
     orders = read_table(spark, sf_dir, "orders")
     batch = orders.limit(10).withColumn("o_orderpriority", F.lit("X"))
-    merged = merge_upsert(
-        orders, batch, ["o_orderkey"], preserve_cols=["o_orderdate"], touch_cols=[]
-    )
+    merged = merge_upsert(orders, batch, ["o_orderkey"], preserve_cols=["o_orderdate"])
     p = _plan(merged)
     # base rows: 1500; batch: 10. Every BroadcastExchange subtree must sit
     # below a join whose other side is the full scan — cheap proxy: the
@@ -69,6 +67,24 @@ def test_merge_preserve_never_broadcasts_base(spark, sf_dir):
     assert merged.count() == orders.count()
     row = merged.filter(F.col("o_orderkey") == batch.first()["o_orderkey"]).first()
     assert row["o_orderpriority"] == "X"
+
+
+def test_merge_key_unique_batch_no_aggregate_no_shuffle(spark, sf_dir):
+    """The merge takes a key-unique batch as it is: in the pipeline's
+    shape (preserve_cols + observation) the plan holds no aggregate and
+    no shuffle, only the base scan and broadcasts of the batch side."""
+    from pyspark.sql import Observation
+
+    from usajobs_etl_service_spark.sinks.upsert import merge_upsert
+
+    orders = read_table(spark, sf_dir, "orders")
+    batch = orders.filter(F.col("o_orderkey") < 100).withColumn("o_orderpriority", F.lit("X"))
+    p = _plan(
+        merge_upsert(orders, batch, ["o_orderkey"], preserve_cols=["o_orderdate"], observation=Observation())
+    )
+    assert "BroadcastHashJoin" in p
+    assert "Aggregate" not in p
+    assert re.search(r"(?<!Broadcast)Exchange", p) is None
 
 
 def test_dedup_single_shuffle(spark, sf_dir):

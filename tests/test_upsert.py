@@ -1,7 +1,9 @@
 """Upsert sink semantics (S6/J1/A8) — mirrors the reference's
 integration assertions (reference tests/test_integration.py:70-151):
 insert metrics, update-in-place with stable row count, created_at
-preserved / updated_at refreshed, in-batch first-wins dedup."""
+preserved / updated_at taken from the batch. The merge takes a
+key-unique batch; in-batch first-wins dedup is the caller's (see
+``test_pipeline::test_in_batch_dup_first_wins``)."""
 
 from __future__ import annotations
 
@@ -59,32 +61,15 @@ def test_update_in_place_count_stable(spark, base):
 def test_created_preserved_updated_refreshed(spark, base):
     t1 = datetime.datetime(2024, 6, 1, 12, 0, 0)
     batch = _df(spark, [("https://jobs/1", "Data Engineer II", "$99,000", t1, t1)])
-    merged = merge_upsert(
-        base, batch, ["position_uri"], preserve_cols=["created_at"], touch_cols=["updated_at"]
-    )
+    merged = merge_upsert(base, batch, ["position_uri"], preserve_cols=["created_at"])
     row = merged.filter(F.col("position_uri") == "https://jobs/1").first()
     assert row["created_at"] == T0  # preserved from base
-    assert row["updated_at"] > t1  # refreshed to now
+    assert row["updated_at"] == t1  # the batch's stamp is the one written
     new_row = merge_upsert(
         base,
         _df(spark, [("https://jobs/9", "New", "$1", t1, t1)]),
         ["position_uri"],
         preserve_cols=["created_at"],
-        touch_cols=["updated_at"],
     ).filter(F.col("position_uri") == "https://jobs/9").first()
     assert new_row["created_at"] == t1  # no base row -> batch value kept
 
-
-def test_in_batch_first_wins(spark, base):
-    batch = spark.createDataFrame(
-        [
-            ("https://jobs/5", "First", "$1", T0, T0, 0),
-            ("https://jobs/5", "Second", "$2", T0, T0, 1),
-        ],
-        SCHEMA + ", ingest_seq long",
-    )
-    merged = merge_upsert(base, batch, ["position_uri"], order_col="ingest_seq")
-    row = merged.filter(F.col("position_uri") == "https://jobs/5").first()
-    assert row["position_title"] == "First"
-    stats = upsert_stats(base, batch, ["position_uri"], order_col="ingest_seq")
-    assert stats == {"inserted": 1, "updated": 0, "total": 1}

@@ -54,15 +54,6 @@ def exists(path: str, spark: SparkSession | None = None) -> bool:
     return bool(fs.exists(hpath))
 
 
-def dir_size_bytes(path: str, spark: SparkSession | None = None) -> int:
-    """Total bytes of the files directly under ``path`` (0 if absent)."""
-    spark = _active_spark(spark)
-    fs, hpath = _fs_and_path(spark, path)
-    if not fs.exists(hpath):
-        return 0
-    return sum(st.getLen() for st in fs.listStatus(hpath) if st.isFile())
-
-
 def write_file_atomic(path: str, data: bytes, spark: SparkSession | None = None) -> None:
     """Write ``data`` as the file ``path``: first to a ``_``-prefixed
     sibling, which Spark's file readers skip, then renamed into place, so

@@ -48,21 +48,6 @@ def get_structured_logger(name: str = "usajobs_etl_service_spark", stream=None) 
     return logger
 
 
-def observe_ingest(df: DataFrame, name: str = "ingest_metrics") -> tuple[DataFrame, Observation]:
-    """Attach A9 counters to a postings DataFrame: rows, valid URIs,
-    null dates, distinct-ish org count. Metrics materialize with the
-    first action on the returned frame — zero extra scans."""
-    obs = Observation(name)
-    observed = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows"),
-        F.count(F.when(F.col("position_uri").startswith("http"), 1)).alias("valid_uris"),
-        F.count(F.when(F.col("position_start_date").isNull(), 1)).alias("null_start_dates"),
-        F.approx_count_distinct("organization_name").alias("approx_orgs"),
-    )
-    return observed, obs
-
-
 def observe_counts(df: DataFrame, name: str = "metrics", **aggs) -> tuple[DataFrame, Observation]:
     """Generic observe() attach: ``observe_counts(df, rows=F.count(...))``."""
     obs = Observation(name)

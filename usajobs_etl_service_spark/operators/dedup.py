@@ -1,9 +1,9 @@
 """Deduplication operators: the reference's in-batch first-wins dedup
-(A6/J2, reference ``etl/etl.py:452-465``) and the at-scale exact-dedup
-extension (SURVEY.md §2.11).
+(A6/J2, reference ``etl/etl.py:452-465``) and the corpus-dedup
+extensions (SURVEY.md §2.11): sub-document units and keep-the-best.
 
-Scale notes: both shapes are a single hash-partition shuffle on the key.
-First-wins needs a deterministic order column — ``dropDuplicates`` alone
+Scale notes: first-wins is a single hash-partition shuffle on the key.
+It needs a deterministic order column — ``dropDuplicates`` alone
 keeps an arbitrary row per key, which flakes hash-match tests AND makes
 reruns non-reproducible on a cluster. The reader supplies ``ingest_seq``
 (page*page_size + index) precisely so this window is deterministic. If a
@@ -30,23 +30,6 @@ def dedup_first_wins(df: DataFrame, key_cols: list[str], order_col: str) -> Data
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
-    )
-
-
-def dedup_exact(df: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Exact dedup, any-row-per-key: ``dropDuplicates`` — hash aggregate,
-    map-side partial, one shuffle. Use when no order is meaningful."""
-    return df.dropDuplicates(key_cols)
-
-
-def duplicate_stats(df: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Keys with >1 occurrence and their counts (the reference logs each
-    dropped dupe, etl.py:459-463; at scale you want the aggregate, not a
-    log line per row)."""
-    return (
-        df.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("occurrences"))
-        .filter(F.col("occurrences") > 1)
     )
 
 

@@ -101,7 +101,7 @@ class JobPipeline:
             spool = tempfile.mkdtemp(prefix="rest_spool_")
             base = self.current_table()
             fresh, metrics.api_calls = scan_to_dataframe(
-                self.spark, self.source, self.config.keyword, self.config.location, spool
+                self.spark, self.source, self.config.keyword, self.config.location, spool_dir=spool
             )
             fresh = dedup_first_wins(fresh, ["position_uri"], "ingest_seq").drop("ingest_seq")
             # materialized once (at most max_pages x 500 rows), so the write
@@ -113,6 +113,8 @@ class JobPipeline:
             metrics.jobs_extracted = extracted.get["rows"]
             if metrics.jobs_extracted:
                 upserted = Observation()
+                # the batch is key-unique (first-wins above) and stamped here,
+                # once: the merge neither deduplicates nor restamps
                 merged = merge_upsert(
                     base,
                     batch.withColumn("created_at", F.current_timestamp()).withColumn(
@@ -120,7 +122,6 @@ class JobPipeline:
                     ),
                     ["position_uri"],
                     preserve_cols=["created_at"],
-                    touch_cols=["updated_at"],
                     observation=upserted,
                 )
                 self._write_version(merged)

@@ -211,11 +211,11 @@ def parquet_col_stat(sf_dir: str, name: str, col: str, want: str = "max"):
 # read runs ON THE DRIVER, so it must be bounded by what the footer
 # metadata says could actually be scanned, not only by error fallback.
 _LOOKUP_MAX_FILES = 64
-_LOOKUP_MAX_CANDIDATE_BYTES = 256 * 1024 * 1024
+_LOOKUP_MAX_CANDIDATE_BYTES = 256 * 1024 * 1024  # uncompressed row-group bytes
 
 
 def _lookup_candidate_bytes(files: list[str], key_col: str, key_val) -> int | None:
-    """Compressed bytes of the row groups a ``key_col == key_val``
+    """Uncompressed bytes of the row groups a ``key_col == key_val``
     lookup could have to scan, from footer metadata only (no data
     read). Groups whose min/max statistics exclude the key are pruned;
     groups without trustworthy stats count in full. BYTE_ARRAY stats
@@ -271,7 +271,7 @@ def parquet_lookup_value(
     before touching any data the footer metadata is consulted — more
     than ``max_files`` files, or candidate row groups (those whose
     statistics cannot exclude the key) totalling more than
-    ``max_candidate_bytes`` compressed, route to ``None`` so the
+    ``max_candidate_bytes`` uncompressed, route to ``None`` so the
     caller's distributed Spark path does the lookup. A 100 TB table
     with unclustered keys therefore never turns this probe into an
     unbounded driver-side scan."""

@@ -29,6 +29,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+from usajobs_etl_service_spark.operators.dedup import dedup_first_wins
+
 
 def build_upsert_sql(table: str, columns: list[str], key: str, n_rows: int, *, touch_col: str | None = "updated_at") -> str:
     """One multi-row INSERT ... ON CONFLICT DO UPDATE statement with
@@ -117,9 +119,7 @@ def jdbc_upsert(
     (ingest_seq) that is not a table column. Pass ``drop_order_col=False``
     when the ordering column (e.g. ``extracted_at``) IS a real column of
     the target table and must be written."""
-    from usajobs_etl_service_spark.sinks.upsert import prepare_batch
-
-    df = prepare_batch(df, [key], order_col)
+    df = dedup_first_wins(df, [key], order_col) if order_col is not None else df.dropDuplicates([key])
     if drop_order_col and order_col is not None and order_col in df.columns:
         df = df.drop(order_col)
     columns = df.columns

@@ -1,11 +1,15 @@
 """S6 / J1 / A8 — the upsert (merge) sink (SURVEY.md §2.1 S6, §2.3 J1,
 §2.4 A8; reference ``etl/etl.py:445-525``, trigger ``init.sql:28-41``).
 
-Semantics preserved from the reference:
-- **first-wins within a batch** (in-batch dedup by key, etl.py:452-465),
-- **last-writer-wins against the table** (ON CONFLICT DO UPDATE),
-- ``created_at`` preserved on update, ``updated_at`` refreshed
-  (DO UPDATE list excludes created_at; trigger refreshes updated_at),
+The merge takes a **key-unique batch**. As with the reference's
+``INSERT … ON CONFLICT`` and with ``MERGE INTO``, which both reject a
+source that names a key twice, the caller deduplicates first — first-wins
+by arrival order with ``operators.dedup.dedup_first_wins`` (A6, reference
+etl.py:452-465) — and stamps the batch's timestamps itself. Here:
+- **last-writer-wins against the table** (ON CONFLICT DO UPDATE): the
+  batch row replaces the table row with the same key,
+- ``preserve_cols`` (reference: ``created_at``) keep the table's value
+  on update (the DO UPDATE list excludes created_at),
 - per-run metrics ``{"inserted", "updated", "total"}`` — the reference
   derives them from the PG ``(xmax = 0)`` trick; here they are the
   semi/anti-join split of the batch against the table, either as a
@@ -14,10 +18,11 @@ Semantics preserved from the reference:
 
 Scale shape: the batch is normally orders of magnitude smaller than the
 table, so the batch side is broadcast — the merge is then a scan of the
-base table with a broadcast hash anti-join (no shuffle of the base). On
-storage that supports it, the same semantics map 1:1 to ``MERGE INTO``
-(Delta/Iceberg); this module is the engine-native implementation over
-the plain parquet versions of ``sinks/snapshot``.
+base table with a broadcast hash anti-join (no shuffle of the base, and
+no aggregate over the batch). On storage that supports it, the same
+semantics map 1:1 to ``MERGE INTO`` (Delta/Iceberg); this module is the
+engine-native implementation over the plain parquet versions of
+``sinks/snapshot``.
 """
 
 from __future__ import annotations
@@ -25,42 +30,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from usajobs_etl_service_spark.operators.dedup import dedup_first_wins
-
-
-def prepare_batch(batch: DataFrame, key_cols: list[str], order_col: str | None = None) -> DataFrame:
-    """In-batch first-wins dedup (A6) — mirrors reference etl.py:452-465."""
-    if order_col is not None:
-        return dedup_first_wins(batch, key_cols, order_col)
-    return batch.dropDuplicates(key_cols)
-
 
 def merge_upsert(
     base: DataFrame,
     batch: DataFrame,
     key_cols: list[str],
     *,
-    order_col: str | None = None,
     preserve_cols: list[str] | None = None,
-    touch_cols: list[str] | None = None,
     observation: Observation | None = None,
 ) -> DataFrame:
     """Return the post-merge table: base rows whose key is not in the
     batch, plus the batch (last-writer-wins per key).
 
-    ``preserve_cols``: columns whose base value survives an update
-    (reference: ``created_at``). ``touch_cols``: columns refreshed to
-    ``current_timestamp()`` on every written row (reference:
-    ``updated_at`` via trigger). ``observation``: receives
-    ``inserted``/``updated``/``total`` (``upsert_stats``' values) from
-    the action that materializes the result — the reference's
-    ``RETURNING (xmax = 0)`` readback, with no job of its own.
+    ``batch`` must hold each key at most once; callers deduplicate it
+    first-wins (A6, ``dedup_first_wins``). ``preserve_cols``: columns
+    whose base value survives an update (reference: ``created_at``).
+    ``observation``: receives ``inserted``/``updated``/``total``
+    (``upsert_stats``' values) from the action that materializes the
+    result — the reference's ``RETURNING (xmax = 0)`` readback, with no
+    job of its own.
     """
-    b = prepare_batch(batch, key_cols, order_col)
-    if order_col is not None and order_col in b.columns:
-        b = b.drop(order_col)
+    b = batch
     preserve_cols = preserve_cols or []
-    touch_cols = touch_cols or []
 
     keys_b = b.select(*key_cols)
     if preserve_cols or observation is not None:
@@ -81,8 +72,6 @@ def merge_upsert(
             )
         for c in preserve_cols:
             b = b.withColumn(c, F.coalesce(F.col(f"__base_{c}"), F.col(c))).drop(f"__base_{c}")
-    for c in touch_cols:
-        b = b.withColumn(c, F.current_timestamp())
 
     # anti-join on the batch's key frame, not on ``b``: the observed node
     # must appear in the plan once
@@ -90,20 +79,13 @@ def merge_upsert(
     return untouched.unionByName(b.select(*base.columns))
 
 
-def merge_metrics(
-    base: DataFrame,
-    batch: DataFrame,
-    key_cols: list[str],
-    *,
-    order_col: str | None = None,
-) -> DataFrame:
+def merge_metrics(base: DataFrame, batch: DataFrame, key_cols: list[str]) -> DataFrame:
     """A8: one-row DataFrame (inserted, updated, total) — the semi/anti
     split that replaces the reference's ``(xmax = 0) AS inserted`` flag
-    readback (etl.py:487, 514-515). One pass over the (small) batch with
-    a broadcast-able probe of base keys.
+    readback (etl.py:487, 514-515). One pass over the (small) key-unique
+    batch with a broadcast-able probe of base keys.
     """
-    b = prepare_batch(batch, key_cols, order_col)
-    keys_b = b.select(*key_cols)
+    keys_b = batch.select(*key_cols)
     # prune base keys to the batch's keys (broadcast semi on the small
     # side) before the probe join — never materialize/shuffle the full
     # base key set
@@ -121,8 +103,8 @@ def merge_metrics(
     )
 
 
-def upsert_stats(base: DataFrame, batch: DataFrame, key_cols: list[str], order_col: str | None = None) -> dict:
+def upsert_stats(base: DataFrame, batch: DataFrame, key_cols: list[str]) -> dict:
     """Reference-shaped return value: ``{"inserted": n, "updated": m,
-    "total": n+m}`` (etl.py:519-524)."""
-    row = merge_metrics(base, batch, key_cols, order_col=order_col).first()
+    "total": n+m}`` (etl.py:519-524) for a key-unique batch."""
+    row = merge_metrics(base, batch, key_cols).first()
     return {"inserted": row["inserted"], "updated": row["updated"], "total": row["total"]}

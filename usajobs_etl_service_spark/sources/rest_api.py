@@ -189,53 +189,20 @@ def read_spool(spark: SparkSession, spool_dir: str) -> DataFrame:
     return flatten_postings(parse_api_pages(raw))
 
 
-def compact_spool(
-    spark: SparkSession,
-    spool_dir: str,
-    out_dir: str,
-    *,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Compact a spool of many tiny per-page JSON files into
-    ``ceil(input_bytes / target_file_bytes)`` parquet files.
-
-    Long-running incremental ingest accretes one small file per API
-    page; at scale that small-files problem dominates scan planning
-    (one task + one open per file). Compaction restores healthy file
-    sizes — and parquet+snappy beats raw JSON bytes, so the target is
-    conservative. Returns the number of output files."""
-    import math
-
-    from usajobs_etl_service_spark.fs import dir_size_bytes
-
-    total = dir_size_bytes(spool_dir, spark)
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    raw = spark.read.schema("page long, payload string").json(spool_dir)
-    raw.repartition(n_files).write.mode("overwrite").parquet(out_dir)
-    return n_files
-
-
-def read_compacted_spool(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Flattened postings from a compacted spool (same result as
-    ``read_spool`` on the original)."""
-    return flatten_postings(parse_api_pages(spark.read.parquet(out_dir)))
-
-
 def scan_to_dataframe(
     spark: SparkSession,
     source: RestPageSource,
     keyword: str,
     location: str | None = None,
-    spool_dir: str | None = None,
+    *,
+    spool_dir: str,
 ) -> tuple[DataFrame, int]:
     """S1-S4 end-to-end: paginated scan -> spool -> distributed flatten;
-    returns (postings, api_calls). Without a spool dir, pages go through
-    a local temp dir (still never a whole-run Python list)."""
-    import tempfile
-
-    spool = spool_dir or tempfile.mkdtemp(prefix="rest_spool_")
-    _, api_calls = spool_pages_to_json(source, spool, keyword, location)
-    return read_spool(spark, spool), api_calls
+    returns (postings, api_calls). Pages go through ``spool_dir`` (never
+    a whole-run Python list), which the caller owns and deletes once the
+    postings are no longer read."""
+    _, api_calls = spool_pages_to_json(source, spool_dir, keyword, location)
+    return read_spool(spark, spool_dir), api_calls
 
 
 def http_transport(base_url: str, headers: dict[str, str], timeout_seconds: float = 30.0):
