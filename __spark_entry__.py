@@ -714,10 +714,9 @@ def q40_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q41_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming-surface semantics on the batch path: tumbling 1-day
-    event-time windows (same plan Structured Streaming runs with a
-    watermark — streaming/pipeline.windowed_event_counts)."""
-    from usajobs_etl_service_spark.streaming.pipeline import windowed_event_counts
+    """Tumbling 1-day event-time windows per event_type
+    (operators/timeseries.windowed_event_counts)."""
+    from usajobs_etl_service_spark.operators.timeseries import windowed_event_counts
 
     events = _t(spark, sf_dir, "events")
     out = windowed_event_counts(events, window_duration="1 day")
@@ -740,7 +739,7 @@ def q42_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented contract is ``>= gap`` starts a new island. Both are
     self-consistent engine/oracle pairs; they differ from each other
     only on the exact-gap knife edge."""
-    from usajobs_etl_service_spark.streaming.pipeline import sessionize
+    from usajobs_etl_service_spark.operators.timeseries import sessionize
 
     events = _t(spark, sf_dir, "events")
     out = sessionize(events, gap="30 minutes")
@@ -1192,9 +1191,9 @@ def q69_training_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expensive gates: a nondeterministic barrier also blocks downstream
     # pushdown, and row-wise predicates commute, so filtering early both
     # keeps it scan-adjacent and spares the HOF verdict on the holdout.
-    # curation_gate is the SAME stateless composition the streaming
-    # path runs ahead of its cross-batch dedup (streaming/pipeline.py).
-    from usajobs_etl_service_spark.streaming.pipeline import curation_gate
+    # curation_gate (operators/repetition.py) is the stateless
+    # quality/lang/repetition composition.
+    from usajobs_etl_service_spark.operators.repetition import curation_gate
 
     curated = curation_gate(deduped.filter(F.col("doc_id") % 10 != 0))
     # contamination is a property of the RAW text — compute the bad-id
@@ -5870,20 +5869,14 @@ def q239_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 def q240_ttl_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Extension (streaming TTL dedup, queryable artifact — round-10
-    VERDICT #6): the BATCH-EQUIVALENT contract of the event-time TTL'd
-    stateful dedup (streaming/stateful.ttl_dedup_batch): per user, emit
-    each arrival that starts a new 30-minute island — no prior event
-    within the TTL, where every arrival (emitted or suppressed)
-    refreshes the clock. This is exactly the emitted set of
-    streaming_ttl_dedup (applyInPandasWithState, EventTimeTimeout,
-    state = one long per key) on an in-order spool replay — pinned by
-    tests/test_stateful_streaming.py's file-per-batch parity test with
-    cross-batch splits and suppressions — so the oracle checking THIS
-    plan (the q42 gaps-and-islands pattern) anchors the streaming
-    operator too. Gap compare is >= on the exact day-time interval
-    (integer microseconds underneath, the q42 boundary convention)."""
-    from usajobs_etl_service_spark.streaming.stateful import ttl_dedup_batch
+    """Extension (TTL dedup over event replay,
+    operators/timeseries.ttl_dedup_batch): per user, emit each arrival
+    that starts a new 30-minute island — no prior event within the
+    TTL, where every arrival (emitted or suppressed) refreshes the
+    clock. The oracle checks it with the q42 gaps-and-islands pattern.
+    Gap compare is >= on the exact day-time interval (integer
+    microseconds underneath, the q42 boundary convention)."""
+    from usajobs_etl_service_spark.operators.timeseries import ttl_dedup_batch
 
     events = _t(spark, sf_dir, "events")
     out = ttl_dedup_batch(

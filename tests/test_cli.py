@@ -37,6 +37,14 @@ def test_cli_schedule_loop_runs_n_times(spark, tmp_path, capsys):
     assert len(lines) == 2
 
 
+def test_max_pages_env_caps_the_scan(spark, tmp_path, monkeypatch, capsys):
+    """MAX_PAGES reaches the page source: two 500-posting pages of 1200."""
+    monkeypatch.setenv("MAX_PAGES", "2")
+    assert main(["--table-path", str(tmp_path / "tbl"), "--demo-jobs", "1200"]) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert (out["api_calls"], out["jobs_extracted"]) == (2, 1000)
+
+
 def test_live_source_waits_between_pages(spark, tmp_path, monkeypatch, capsys):
     """--base-url pages are 1.5 s apart, the reference's API_DELAY; the
     demo source does not wait."""

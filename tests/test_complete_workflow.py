@@ -63,12 +63,11 @@ def test_complete_etl_workflow(spark, tmp_path):
     src = RestPageSource(
         transport=lambda params: REALISTIC_PAGE if params["Page"] == 1 else {"SearchResult": {"SearchResultItems": []}},
         page_size=3,
+        max_pages=1,
         retry=RetryPolicy(sleep=no_sleep),
         sleep=no_sleep,
     )
-    pipeline = JobPipeline(
-        spark, src, PipelineConfig(keyword="data engineering", max_pages=1, table_path=str(tmp_path / "tbl"))
-    )
+    pipeline = JobPipeline(spark, src, PipelineConfig(keyword="data engineering", table_path=str(tmp_path / "tbl")))
     results = pipeline.run()
 
     # run-result assertions (reference :530-533)

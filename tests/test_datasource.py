@@ -45,40 +45,6 @@ def test_page_size_clamped(spark):
     assert raw.rdd.getNumPartitions() == 2
 
 
-def test_rows_and_arrow_emit_modes_agree(spark):
-    """emit=rows (per-row tuples) and emit=rows_arrow (one RecordBatch
-    per page) must produce identical data with the item schema; both
-    carry real row volume (500 rows/page), unlike q46's 1-row/page
-    payload contract."""
-    register_rest_datasource(spark)
-
-    def load(emit):
-        return (
-            spark.read.format("usajobs_rest")
-            .option("mock_total", 1200)
-            .option("results_per_page", 500)
-            .option("emit", emit)
-            .load()
-        )
-
-    rows = load("rows")
-    arrow = load("rows_arrow")
-    assert rows.schema == arrow.schema
-    assert rows.columns[0] == "position_title"
-    a = {tuple(r) for r in rows.collect()}
-    b = {tuple(r) for r in arrow.collect()}
-    assert a == b
-    assert len(a) == 1200
-
-
-def test_emit_option_rejected_if_unknown(spark):
-    import pytest
-
-    register_rest_datasource(spark)
-    with pytest.raises(Exception, match="emit"):
-        spark.read.format("usajobs_rest").option("emit", "bogus").load().collect()
-
-
 def test_flattened_end_to_end(spark):
     flat = read_rest_jobs(spark, mode="mock", mock_total=1200, results_per_page=500)
     assert flat.count() == 1200

@@ -24,7 +24,7 @@ def _pipeline(spark, tmp_path, pages):
     src = RestPageSource(
         transport=paged_transport(pages), page_size=5, retry=RetryPolicy(sleep=no_sleep), sleep=no_sleep
     )
-    cfg = PipelineConfig(keyword="data", location=None, max_pages=20, table_path=str(tmp_path / "tbl"))
+    cfg = PipelineConfig(keyword="data", location=None, table_path=str(tmp_path / "tbl"))
     return JobPipeline(spark, src, cfg)
 
 

@@ -5,7 +5,13 @@ from __future__ import annotations
 
 from datetime import datetime
 
-from usajobs_etl_service_spark.operators.timeseries import resample_gapfill, scd2_intervals
+from usajobs_etl_service_spark.operators.timeseries import (
+    resample_gapfill,
+    scd2_intervals,
+    sessionize,
+    windowed_event_counts,
+)
+from usajobs_etl_service_spark.session import read_table
 
 SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double"
 
@@ -73,3 +79,20 @@ def test_scd2_single_run_is_one_open_interval(spark):
     rows = [(i, datetime(2024, 1, 1, i), 7, "view", 0.0) for i in range(5)]
     out = scd2_intervals(_ev(spark, rows)).collect()
     assert len(out) == 1 and out[0]["valid_to"] is None
+
+
+def test_windowed_counts_on_events(spark, sf_dir):
+    events = read_table(spark, sf_dir, "events")
+    out = windowed_event_counts(events, window_duration="1 day")
+    rows = out.collect()
+    assert sum(r["n_events"] for r in rows) == events.count()
+    # every window boundary is aligned to the day
+    assert all(r["window_start"].hour == 0 for r in rows)
+
+
+def test_sessionize_on_events(spark, sf_dir):
+    events = read_table(spark, sf_dir, "events")
+    out = sessionize(events, gap="30 minutes")
+    rows = out.collect()
+    assert sum(r["n_events"] for r in rows) == events.count()
+    assert all(r["session_end"] >= r["session_start"] for r in rows)

@@ -211,8 +211,6 @@ def run(outdir: str) -> None:
         "lsh_cap_drop_counters": _cap_drop_counters(spark, outdir),
         "minhash_persisted_vs_inline": _minhash_crossover(spark, outdir, big),
         "int8_store_vs_inline": _int8_store_smoke(spark, outdir, big),
-        "watermark_dedup_state": _watermark_dedup_state_smoke(spark),
-        "ttl_dedup_state": _ttl_dedup_state_smoke(spark),
         "closers_orders_side": _closers_smoke(spark),
         "cc_distributed_rounds": _cc_rounds(spark, outdir),
         "kcore_distributed": _kcore_smoke(spark),
@@ -1067,213 +1065,6 @@ def _khop_smoke(spark) -> dict[str, dict]:
         want[v] = want.get(v, 0) + 1
     out["small_scale_python_exact"] = want == out[f"m{m}"]["nodes_per_dist"]
     return out
-
-
-def _watermark_dedup_state_smoke(spark) -> dict:
-    """streaming_watermark_dedup's bounded-state claim, MEASURED from
-    the state-store operator metrics (round-9 verdict item: the only
-    r9 surface with no queryable evidence artifact). A 20-window spool
-    (5k fresh keys per 10-minute window, every row sent twice) drains
-    file-per-batch through (a) the watermark-bounded dedup and (b)
-    plain unbounded dropDuplicates. Both emit the same 100k rows; the
-    unbounded store finishes holding EVERY key ever (100k) while the
-    watermark store holds only the trailing window's keys — the ratio
-    is the 100 TB/day story (state ~ keys/window, not keys/corpus)."""
-    import shutil
-    import tempfile
-    from datetime import datetime, timedelta, timezone
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from usajobs_etl_service_spark.streaming.pipeline import watermark_dedup_spool
-
-    n_win, keys_per = 20, 5_000
-    base = datetime(2024, 1, 1, tzinfo=timezone.utc)
-    root = tempfile.mkdtemp(prefix="smoke_wmdedup_")
-    try:
-        spool = os.path.join(root, "spool")
-        os.makedirs(spool)
-        for w in range(n_win):
-            ks = [w * keys_per + i for i in range(keys_per)] * 2
-            ts = [base + timedelta(seconds=600 * w)] * len(ks)
-            pq.write_table(
-                pa.table(
-                    {
-                        "k": pa.array(ks, pa.int64()),
-                        "ts": pa.array(ts, pa.timestamp("us", tz="UTC")),
-                    }
-                ),
-                os.path.join(spool, f"b{w:03d}.parquet"),
-            )
-        t0 = time.perf_counter()
-        wm = watermark_dedup_spool(
-            spark,
-            spool,
-            os.path.join(root, "out_wm"),
-            os.path.join(root, "ck_wm"),
-            key_cols=["k"],
-            watermark="10 minutes",
-        )
-        wm["sec"] = round(time.perf_counter() - t0, 3)
-        # unbounded comparator: same spool, same cadence, no watermark
-        stream = (
-            spark.readStream.schema("k long, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(spool)
-        )
-        t0 = time.perf_counter()
-        q = (
-            stream.dropDuplicates(["k"])
-            .writeStream.format("parquet")
-            .option("path", os.path.join(root, "out_ub"))
-            .option("checkpointLocation", os.path.join(root, "ck_ub"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        rows, bts = [], []
-        for p in q.recentProgress:
-            ops = p.get("stateOperators") or []
-            if ops:
-                rows.append(ops[0].get("numRowsTotal", 0))
-                bts.append(ops[0].get("memoryUsedBytes", 0))
-        ub = {
-            "rows_emitted": spark.read.parquet(os.path.join(root, "out_ub")).count(),
-            "state_rows_final": rows[-1] if rows else 0,
-            "state_bytes_final": bts[-1] if bts else 0,
-            "sec": round(time.perf_counter() - t0, 3),
-        }
-        return {
-            "windows": n_win,
-            "keys_per_window": keys_per,
-            "dup_copies": 2,
-            "watermark_dedup": wm,
-            "unbounded_dropduplicates": ub,
-            "outputs_equal": wm["rows_emitted"] == ub["rows_emitted"] == n_win * keys_per,
-            "state_rows_ratio_unbounded_over_wm": round(
-                ub["state_rows_final"] / max(wm["state_rows_final"], 1), 1
-            ),
-        }
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def _ttl_dedup_state_smoke(spark) -> dict:
-    """q240's EVENT-TIME TTL dedup at 10x the watermark smoke's key
-    rate (round-11 VERDICT #8): 10 windows x 50k fresh keys, every row
-    duplicated 1s later (suppressed inside its island), plus 10% of
-    the window-before-last's keys re-arriving 1200s later (>= TTL ->
-    new island, the re-emit path). The batch contract
-    (ttl_dedup_batch over the whole spool) is the golden output; the
-    streaming run must emit the IDENTICAL set while its state store
-    peaks at ~live keys (the current window's keys plus the not-yet-
-    evicted previous window), never the corpus key count — the
-    100 TB/day posture: state ~ keys/TTL-window."""
-    import shutil
-    import tempfile
-    from datetime import datetime, timedelta, timezone
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from usajobs_etl_service_spark.streaming.stateful import (
-        streaming_ttl_dedup,
-        ttl_dedup_batch,
-    )
-
-    n_win, keys_per, ttl_s = 10, 50_000, 600
-    rearrive_frac = 0.1
-    base = datetime(2024, 1, 1, tzinfo=timezone.utc)
-    root = tempfile.mkdtemp(prefix="smoke_ttldedup_")
-    try:
-        spool = os.path.join(root, "spool")
-        os.makedirs(spool)
-        seq = 0
-        total_keys = n_win * keys_per
-        expected_emits = total_keys
-        for w in range(n_win):
-            fresh = list(range(w * keys_per, (w + 1) * keys_per))
-            ks, ts = [], []
-            t0 = base + timedelta(seconds=600 * w)
-            for k in fresh:
-                ks += [k, k]                     # dup 1s later: suppressed
-                ts += [t0, t0 + timedelta(seconds=1)]
-            if w >= 2:  # re-arrivals: last seen 1199s ago (>= 600 TTL)
-                re_keys = list(range(w * keys_per - 2 * keys_per,
-                                     w * keys_per - 2 * keys_per + int(keys_per * rearrive_frac)))
-                for k in re_keys:
-                    ks.append(k)
-                    ts.append(t0)
-                expected_emits += len(re_keys)
-            seqs = list(range(seq, seq + len(ks)))
-            seq += len(ks)
-            pq.write_table(
-                pa.table({
-                    "seq": pa.array(seqs, pa.int64()),
-                    "k": pa.array(ks, pa.int64()),
-                    "ts": pa.array(ts, pa.timestamp("us", tz="UTC")),
-                }),
-                os.path.join(spool, f"b{w:03d}.parquet"),
-            )
-        golden = ttl_dedup_batch(
-            spark.read.parquet(spool),
-            key_cols=["k"], ts_col="ts", tiebreak_col="seq", ttl_seconds=ttl_s,
-        ).select("k", "seq")
-        n_golden = golden.count()
-
-        stream = (
-            spark.readStream.schema("seq long, k long, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(spool)
-        )
-        out = streaming_ttl_dedup(
-            stream, key_cols=["k"], ts_col="ts", tiebreak_col="seq", ttl_seconds=ttl_s
-        )
-        t0 = time.perf_counter()
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", os.path.join(root, "out"))
-            .option("checkpointLocation", os.path.join(root, "ck"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        sec = round(time.perf_counter() - t0, 3)
-        rows, bts = [], []
-        for p in q.recentProgress:
-            for op in p.get("stateOperators") or []:
-                rows.append(op.get("numRowsTotal", 0))
-                bts.append(op.get("memoryUsedBytes", 0))
-        got = spark.read.parquet(os.path.join(root, "out")).select("k", "seq")
-        only_stream = got.exceptAll(golden).count()
-        only_batch = golden.exceptAll(got).count()
-        return {
-            "windows": n_win,
-            "keys_per_window": keys_per,
-            "total_keys": total_keys,
-            "ttl_seconds": ttl_s,
-            "rows_spooled": seq,
-            "expected_emits": expected_emits,
-            "batch_contract_rows": n_golden,
-            "stream_rows": got.count(),
-            "stream_minus_batch": only_stream,
-            "batch_minus_stream": only_batch,
-            "outputs_equal_batch_contract": only_stream == 0 and only_batch == 0,
-            "state_rows_peak": max(rows) if rows else 0,
-            "state_rows_final": rows[-1] if rows else 0,
-            "state_bytes_peak": max(bts) if bts else 0,
-            # peak = current window + previous window (inside TTL) +
-            # window-before-last awaiting its timeout at the NEXT
-            # watermark advance + re-arrivals: < 3.2 windows of keys,
-            # independent of total corpus keys
-            "state_bound_live_keys_not_corpus": (max(rows) if rows else 0)
-            <= int(3.2 * keys_per),
-            "sec": sec,
-        }
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _closers_smoke(spark) -> dict:

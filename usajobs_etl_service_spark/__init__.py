@@ -16,7 +16,6 @@ Layout
 - ``sinks``      : join-based upsert/merge writer, snapshot export
 - ``operators``  : dedup (exact/near), stats, top-k, similarity search
 - ``plans``      : SQL view layer (recent_job_postings, job_statistics)
-- ``streaming``  : incremental ingest via Structured Streaming
 """
 
 __version__ = "0.1.0"

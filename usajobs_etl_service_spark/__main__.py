@@ -7,9 +7,6 @@ invokes that same command daily. Here:
     python -m usajobs_etl_service_spark                  # one run, demo source
     python -m usajobs_etl_service_spark --base-url URL   # real HTTP source
     python -m usajobs_etl_service_spark --interval-seconds 86400  # schedule loop
-    python -m usajobs_etl_service_spark --stream-dedup-demo DIR   # drain a
-        # parquet spool through the watermark-bounded streaming dedup and
-        # print the measured state-store evidence (one JSON line)
 
 Configuration follows the reference's env contract (SEARCH_KEYWORD,
 SEARCH_LOCATION, MAX_PAGES, JOB_TABLE_PATH — .env.example) with CLI
@@ -84,7 +81,12 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument("--keyword", default=None, help="search keyword (env SEARCH_KEYWORD)")
     p.add_argument("--location", default=None, help="search location (env SEARCH_LOCATION)")
-    p.add_argument("--max-pages", type=int, default=None, help="page cap for the scan (env MAX_PAGES)")
+    p.add_argument(
+        "--max-pages",
+        type=int,
+        default=int(os.environ.get("MAX_PAGES", "20")),
+        help="page cap for the scan (env MAX_PAGES, default 20)",
+    )
     p.add_argument("--table-path", default=None, help="job table root (env JOB_TABLE_PATH)")
     p.add_argument("--base-url", default=os.environ.get("USAJOBS_BASE_URL"), help="real API base URL (needs requests)")
     p.add_argument("--demo-jobs", type=int, default=25, help="synthetic postings served by the demo source")
@@ -96,19 +98,6 @@ def build_parser() -> argparse.ArgumentParser:
         help="number of runs (0 = forever); defaults to 1 without --interval-seconds, forever with it",
     )
     p.add_argument("--master", default=os.environ.get("SPARK_MASTER", "local[*]"), help="Spark master")
-    p.add_argument(
-        "--stream-dedup-demo",
-        default=None,
-        metavar="SPOOL_DIR",
-        help="drain a parquet spool (schema: k long, ts timestamp) through "
-        "the watermark-bounded streaming dedup and print the measured "
-        "state evidence instead of running the ETL pipeline",
-    )
-    p.add_argument(
-        "--stream-watermark",
-        default="10 minutes",
-        help="event-time watermark for --stream-dedup-demo",
-    )
     return p
 
 
@@ -121,39 +110,11 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark("usajobs-etl", master=args.master)
 
-    if args.stream_dedup_demo:
-        import tempfile
-
-        from usajobs_etl_service_spark.streaming.pipeline import (
-            watermark_dedup_spool,
-        )
-
-        import shutil
-
-        work = tempfile.mkdtemp(prefix="stream_dedup_demo_")
-        try:
-            out = watermark_dedup_spool(
-                spark,
-                args.stream_dedup_demo,
-                os.path.join(work, "out"),
-                os.path.join(work, "ck"),
-                key_cols=["k"],
-                watermark=args.stream_watermark,
-            )
-        finally:
-            # only the printed metrics are consumed — don't let repeated
-            # demo runs accumulate spool-sized output + checkpoints
-            shutil.rmtree(work, ignore_errors=True)
-        print(json.dumps({"stream_dedup_demo": out}), flush=True)
-        return 0
-
     cfg = PipelineConfig()
     if args.keyword is not None:
         cfg.keyword = args.keyword
     if args.location is not None:
         cfg.location = args.location
-    if args.max_pages is not None:
-        cfg.max_pages = args.max_pages
     if args.table_path is not None:
         cfg.table_path = args.table_path
 
@@ -166,7 +127,7 @@ def main(argv: list[str] | None = None) -> int:
     else:
         transport, delay = demo_transport(total_jobs=args.demo_jobs), 0.0
 
-    source = RestPageSource(transport=transport, max_pages=cfg.max_pages, delay_seconds=delay)
+    source = RestPageSource(transport=transport, max_pages=args.max_pages, delay_seconds=delay)
     pipeline = JobPipeline(spark, source, cfg)
 
     # --interval-seconds alone means "run on a schedule": default the run

@@ -39,9 +39,8 @@ from pyspark.sql import functions as F
 def mg_merge_reduce(counters: dict, value_counts, k: int) -> dict:
     """Merge a value->count mapping into a Misra-Gries summary and
     reduce it back to <= ``k`` counters (subtract the (k+1)-th largest,
-    drop non-positives). The mergeable-summaries reduction shared by
-    the batch operator below and the streaming form
-    (streaming/stateful.py)."""
+    drop non-positives). The mergeable-summaries reduction of the
+    operator below."""
     for item, cnt in value_counts.items():
         counters[item] = counters.get(item, 0) + int(cnt)
     if len(counters) > k:

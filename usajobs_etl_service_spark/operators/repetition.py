@@ -29,7 +29,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from usajobs_etl_service_spark.functions.text import shingles_from_tokens, tokens_ws
+from usajobs_etl_service_spark.functions.text import lang_id, quality_score, shingles_from_tokens, tokens_ws
+from usajobs_etl_service_spark.plans.barrier import barrier_filter
+from usajobs_etl_service_spark.plans.spread import spread_for_compute
 
 
 def _max_run_length(sorted_arr: Column) -> Column:
@@ -117,3 +119,29 @@ def repetition_signals(
         (F.col("top_token_frac") <= max_top_token_frac)
         & (F.col("dup_2gram_frac") <= max_dup_2gram_frac),
     )
+
+
+def curation_gate(
+    docs: DataFrame,
+    *,
+    text_col: str = "text",
+    min_quality: float = 0.5,
+) -> DataFrame:
+    """Quality + language-id + repetition gate as ONE stateless
+    composition (q69's corpus pipeline): every expression is row-local.
+    The repetition verdict runs behind ``barrier_filter``
+    (plans/barrier.py), computed once per row in projection position.
+    Adds ``lang_pred`` and ``quality`` columns; drops rows failing any
+    gate."""
+    # Scale-adaptive on-ramp: the gate is pure per-row CPU (regex
+    # features, token folds), so a small single-split input would pin
+    # the whole stage on one core; at scale the scan is already wide
+    # and this is a no-op.
+    docs = spread_for_compute(docs)
+    gated = (
+        docs.withColumn("lang_pred", lang_id(F.col(text_col)))
+        .withColumn("quality", quality_score(F.col(text_col)))
+        .filter((F.col("quality") >= min_quality) & (F.col("lang_pred") != "und"))
+        .withColumn("__rt", tokens_ws(F.lower(F.col(text_col))))
+    )
+    return barrier_filter(gated, repetition_keep_tokens(F.col("__rt"))).drop("__rt")

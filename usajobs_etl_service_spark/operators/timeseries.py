@@ -10,6 +10,9 @@ bounded by (time range / bucket) rows per entity — for bounded
 retention windows (days-months of hourly buckets) this is a small
 constant multiple of the entity count, generated executor-side with
 ``sequence`` + ``explode`` (never a driver range loop).
+
+Event-time windowed counts, gap-based sessions and the TTL dedup
+(q41, q42, q240) are batch aggregations over the same event tables.
 """
 
 from __future__ import annotations
@@ -257,4 +260,94 @@ def robust_trend(
                 / F.lit(18.0)
             )
         ).alias("mk_z"),
+    )
+
+
+def windowed_event_counts(
+    events: DataFrame,
+    *,
+    window_duration: str = "1 hour",
+    slide: str | None = None,
+    ts_col: str = "ts",
+) -> DataFrame:
+    """Event-time windowed counts per event_type: tumbling windows, or
+    sliding ones when ``slide`` is shorter than ``window_duration``."""
+    win = F.window(F.col(ts_col), window_duration, slide or window_duration)
+    return (
+        events.groupBy(win.alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
+        .select(
+            F.col("w.start").alias("window_start"),
+            F.col("w.end").alias("window_end"),
+            "event_type",
+            "n_events",
+            "sum_value",
+        )
+    )
+
+
+def sessionize(
+    events: DataFrame,
+    *,
+    gap: str = "30 minutes",
+    ts_col: str = "ts",
+    user_col: str = "user_id",
+) -> DataFrame:
+    """Session windows (gap-based) per user: a session closes once no
+    event follows within ``gap``."""
+    sw = F.session_window(F.col(ts_col), gap)
+    return (
+        events.groupBy(sw.alias("s"), user_col)
+        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
+        .select(
+            F.col("s.start").alias("session_start"),
+            F.col("s.end").alias("session_end"),
+            user_col,
+            "n_events",
+            "sum_value",
+        )
+    )
+
+
+def ttl_dedup_batch(
+    df: DataFrame,
+    *,
+    key_cols: list[str],
+    ts_col: str = "ts",
+    tiebreak_col: str,
+    ttl_seconds: int,
+) -> DataFrame:
+    """TTL dedup over an event table, checkable by a SQL oracle with
+    the q42 gaps-and-islands pattern.
+
+    Semantics: per key, arrivals are ordered by ``(ts, tiebreak)`` and
+    a row is EMITTED iff it starts a new island — no prior arrival
+    within ``ttl_seconds`` of it. This is a TTL that REFRESHES on every
+    arrival (suppressed duplicates extend the timeout): islands split
+    where consecutive-arrival gaps reach the TTL, and the island start
+    is the one emitted row. Gap comparison is ``>=`` on the exact
+    day-time interval (timestamp subtraction is integer microseconds
+    underneath in both engines, and works for TIMESTAMP and
+    TIMESTAMP_NTZ alike — the q42 boundary convention).
+
+    One per-key window (hash partition on the key, the q42 shape —
+    per-key cardinality is event-stream bounded); NULL keys/timestamps
+    are excluded (no arrival order is defined for them)."""
+    if not key_cols:
+        raise ValueError("ttl_dedup_batch: need at least one key column")
+    clean = df.filter(
+        F.col(ts_col).isNotNull() & F.expr(" AND ".join(f"{k} IS NOT NULL" for k in key_cols))
+    )
+    w = Window.partitionBy(*key_cols).orderBy(F.col(ts_col), F.col(tiebreak_col))
+    prev = F.lag(F.col(ts_col)).over(w)
+    return (
+        clean.withColumn("__prev_ts", prev)
+        .filter(
+            F.col("__prev_ts").isNull()
+            | (
+                F.col(ts_col) - F.col("__prev_ts")
+                >= F.expr(f"INTERVAL {int(ttl_seconds)} SECONDS")
+            )
+        )
+        .drop("__prev_ts")
     )

@@ -51,7 +51,6 @@ class PipelineConfig:
 
     keyword: str = field(default_factory=lambda: os.environ.get("SEARCH_KEYWORD", "data engineering"))
     location: str | None = field(default_factory=lambda: os.environ.get("SEARCH_LOCATION") or None)
-    max_pages: int = field(default_factory=lambda: int(os.environ.get("MAX_PAGES", "20")))
     table_path: str = field(default_factory=lambda: os.environ.get("JOB_TABLE_PATH", "/tmp/job_postings"))
 
 
@@ -104,10 +103,11 @@ class JobPipeline:
                 self.spark, self.source, self.config.keyword, self.config.location, spool_dir=spool
             )
             fresh = dedup_first_wins(fresh, ["position_uri"], "ingest_seq").drop("ingest_seq")
-            # materialized once (at most max_pages x 500 rows), so the write
-            # does not recompute spool -> flatten -> dedup. localCheckpoint,
-            # not cache(): over a cached batch the write split a 29.5k-row
-            # table into 18 files instead of 11, with 1.66x the bytes (4 cores)
+            # materialized once (at most the source's max_pages x 500
+            # rows), so the write does not recompute spool -> flatten ->
+            # dedup. localCheckpoint, not cache(): over a cached batch the
+            # write split a 29.5k-row table into 18 files instead of 11,
+            # with 1.66x the bytes (4 cores)
             observed, extracted = observe_counts(fresh, "batch")
             batch = observed.localCheckpoint()
             metrics.jobs_extracted = extracted.get["rows"]

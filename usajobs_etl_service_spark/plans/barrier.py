@@ -22,9 +22,6 @@ exchange, nothing added beyond one XORShift + double compare per row.
 The arithmetic detour matters: a bare ``rand() < 2.0`` does NOT work —
 Spark 4 constant-folds rand-vs-out-of-range-literal comparisons to
 ``true`` before pushdown runs, restoring the deterministic projection.
-``monotonically_increasing_id() >= 0`` works for batch but is
-rejected by the streaming UnsupportedOperationChecker; the rand form
-is legal in both, so the same gate serves the streaming curation path.
 The gate's value is always true regardless of evaluation, so
 task-retry nondeterminism (SPARK-38388 class) cannot change results.
 
@@ -50,7 +47,6 @@ def barrier_filter(df: DataFrame, cond: Column) -> DataFrame:
     """``df.filter(cond)`` with ``cond`` guaranteed to evaluate exactly
     once per row in projection position (codegen'd subexpressions +
     single evaluation of each HOF subtree), never substituted into the
-    Filter condition or the scan's pushed filters. Adds no shuffle;
-    works on batch and streaming DataFrames alike."""
+    Filter condition or the scan's pushed filters. Adds no shuffle."""
     gate = cond & ((F.rand(7) + F.lit(2.0)) > 1.0)
     return df.withColumn(_GATE, gate).filter(F.col(_GATE)).drop(_GATE)

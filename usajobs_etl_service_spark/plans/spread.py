@@ -18,8 +18,7 @@ partitioning, not local-mode constants).
 Correctness posture: keyless ``repartition(n)`` is deterministic under
 retry (``spark.sql.execution.sortBeforeRepartition`` stays on) and the
 callers are per-row transforms feeding aggregates/joins, so results
-are row-order independent. Streaming frames pass through untouched
-(``.rdd`` is illegal on them; micro-batches already size themselves).
+are row-order independent.
 
 Where it is wired: QUERY-level composition points only (the corpus
 pipeline gate, signature/gram producers' call sites). The core
@@ -51,8 +50,6 @@ def spread_for_compute(df: DataFrame) -> DataFrame:
     would pay full physical planning, measured ~80 ms/call): when the
     estimate is at least ``cores x maxPartitionBytes`` the scan itself
     yields >= cores splits and the frame passes through untouched."""
-    if df.isStreaming:
-        return df
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
     try:

@@ -26,17 +26,9 @@ no network; a live deployment supplies ``base_url`` +
 ``auth_header_json`` and the partition fetch uses the same retrying
 transport as the spool source.
 
-``emit`` option — what a partition yields (measured comparison in
-SCALE.md §Python DataSource):
-
-- ``payload`` (default, q46's contract): ONE (page, json) row per
-  page. Worker round-trip dominates at 1 row/page; Arrow batching
-  cannot help this shape (TODO.md round-3 analysis, confirmed).
-- ``rows``: the page's items as per-row tuples (real row volume,
-  pickle serialization row-at-a-time).
-- ``rows_arrow``: the same items as ONE ``pyarrow.RecordBatch`` per
-  page — the Spark 4 Arrow fast path: the worker hands a columnar
-  batch straight to the JVM, no per-row pickling.
+Each partition yields ONE (page, json) row (q46's contract); the
+flatten runs in Spark (``read_rest_jobs``). Arrow batching does not pay
+at 1 row/page (SCALE.md §Python DataSource).
 """
 
 from __future__ import annotations
@@ -50,42 +42,8 @@ PAGE_SIZE_CAP = 500
 
 RAW_SCHEMA = "page int, payload string"
 
-ITEM_SCHEMA = (
-    "position_title string, position_uri string, organization_name string, "
-    "city string, state string, country string, minimum_range string, "
-    "rate_interval string"
-)
 
-ITEM_COLS = [
-    "position_title", "position_uri", "organization_name", "city", "state",
-    "country", "minimum_range", "rate_interval",
-]
-
-
-def _items_to_tuples(payload: dict) -> list[tuple]:
-    """Flatten a page payload's items to ITEM_SCHEMA tuples (shared by
-    the ``rows`` and ``rows_arrow`` emit modes, mock or live)."""
-    out = []
-    for item in payload.get("SearchResult", {}).get("SearchResultItems", []):
-        d = item.get("MatchedObjectDescriptor", {})
-        loc = (d.get("PositionLocation") or [{}])[0]
-        rem = (d.get("PositionRemuneration") or [{}])[0]
-        out.append(
-            (
-                d.get("PositionTitle", ""),
-                d.get("PositionURI", ""),
-                d.get("OrganizationName", ""),
-                loc.get("CityName", ""),
-                loc.get("StateCode", ""),
-                loc.get("CountryCode", ""),
-                str(rem.get("MinimumRange", "")),
-                str(rem.get("RateIntervalCode", "")),
-            )
-        )
-    return out
-
-
-def _mock_page(page: int, per_page: int, total: int, seed: int = 42) -> dict:
+def _mock_page(page: int, per_page: int, total: int) -> dict:
     """Deterministic synthetic page (same recipe as the perf-suite
     generators in FIXTURES.md §2): titles/orgs cycle, URIs unique."""
     start = (page - 1) * per_page
@@ -94,7 +52,7 @@ def _mock_page(page: int, per_page: int, total: int, seed: int = 42) -> dict:
         {
             "MatchedObjectDescriptor": {
                 "PositionTitle": f"Data Engineer {start + i}",
-                "PositionURI": f"https://www.usajobs.gov/job/{seed}-{start + i}",
+                "PositionURI": f"https://www.usajobs.gov/job/42-{start + i}",
                 "OrganizationName": f"Department {(start + i) % 10}",
                 "PositionLocation": [
                     {"CityName": f"City {(start + i) % 10}", "StateCode": f"S{(start + i) % 5}", "CountryCode": "US"}
@@ -116,9 +74,8 @@ def _mock_page(page: int, per_page: int, total: int, seed: int = 42) -> dict:
 
 
 class PagePartition(InputPartition):
-    def __init__(self, page: int, n_pages: int = 1):
-        self.page = page  # first page of this partition's range
-        self.n_pages = n_pages
+    def __init__(self, page: int):
+        self.page = page
 
 
 class RestJobsReader(DataSourceReader):
@@ -128,17 +85,6 @@ class RestJobsReader(DataSourceReader):
         self.max_pages = int(options.get("max_pages", 20))
         self.mode = options.get("mode", "mock")
         self.total = int(options.get("mock_total", 1200))
-        self.seed = int(options.get("mock_seed", 42))
-        self.emit = options.get("emit", "payload")
-        if self.emit not in ("payload", "rows", "rows_arrow"):
-            raise ValueError(f"emit must be payload|rows|rows_arrow, got {self.emit!r}")
-        # partition = a RANGE of pages. One page per partition (the
-        # default, q46's contract) maximizes fetch parallelism for a
-        # rate-limited live API; bulk mirrors should size partitions to
-        # cluster width instead — measured on local[32], 1000 pages as
-        # 1000 partitions is ~6x slower than as 32 partitions purely on
-        # task dispatch + Python-worker round-trips (SCALE.md).
-        self.pages_per_partition = max(int(options.get("pages_per_partition", 1)), 1)
 
     # -- S3: partition planning --------------------------------------------
     def partitions(self):
@@ -149,15 +95,12 @@ class RestJobsReader(DataSourceReader):
             count_all = probe.get("SearchResult", {}).get("SearchResultCountAll", 0)
         n_pages = max((count_all + self.per_page - 1) // self.per_page, 0)
         n_pages = min(n_pages, self.max_pages)
-        step = self.pages_per_partition
-        return [
-            PagePartition(p, min(step, n_pages - p + 1)) for p in range(1, n_pages + 1, step)
-        ]
+        return [PagePartition(p) for p in range(1, n_pages + 1)]
 
     # -- S1: per-partition page fetch --------------------------------------
     def _fetch(self, page: int) -> dict:
         if self.mode == "mock":
-            return _mock_page(page, self.per_page, self.total, self.seed)
+            return _mock_page(page, self.per_page, self.total)
         # pragma: no cover — live transport (same policies as rest_api)
         from usajobs_etl_service_spark.sources.rest_api import RetryPolicy, http_transport
 
@@ -175,20 +118,7 @@ class RestJobsReader(DataSourceReader):
         return RetryPolicy().call(lambda: transport(params))
 
     def read(self, partition: PagePartition) -> Iterator:
-        for page in range(partition.page, partition.page + partition.n_pages):
-            payload = self._fetch(page)
-            if self.emit == "payload":
-                yield (page, json.dumps(payload))
-            elif self.emit == "rows":
-                yield from _items_to_tuples(payload)
-            else:  # rows_arrow: one columnar batch per page, zero pickling
-                import pyarrow as pa
-
-                rows = _items_to_tuples(payload)
-                cols = list(zip(*rows)) if rows else [[] for _ in ITEM_COLS]
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(list(c), pa.string()) for c in cols], names=ITEM_COLS
-                )
+        yield (partition.page, json.dumps(self._fetch(partition.page)))
 
 
 class RestJobsDataSource(DataSource):
@@ -200,9 +130,7 @@ class RestJobsDataSource(DataSource):
         return "usajobs_rest"
 
     def schema(self) -> str:
-        if self.options.get("emit", "payload") == "payload":
-            return RAW_SCHEMA
-        return ITEM_SCHEMA
+        return RAW_SCHEMA
 
     def reader(self, schema) -> RestJobsReader:
         return RestJobsReader(self.options)
