@@ -789,9 +789,9 @@ def q45_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q46_native_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S1-S3 as a native Python DataSource: spark.read.format with one
-    input partition per API page, fetched executor-side (mock
-    transport), flattened through the production S4 path. The oracle
+    """S1/S3 as a native Python DataSource: spark.read.format with one
+    input partition per API page, generated executor-side (synthetic
+    pages), flattened through the production S4 path. The oracle
     reproduces the formulaic mock corpus with generate_series.
 
     Parity demo ONLY: the Python DataSource API yields rows from Python
@@ -800,7 +800,7 @@ def q46_native_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed JSON read, rest_api.py)."""
     from usajobs_etl_service_spark.sources.datasource import read_rest_jobs
 
-    flat = read_rest_jobs(spark, mode="mock", mock_total=1200, results_per_page=500)
+    flat = read_rest_jobs(spark, mock_total=1200, results_per_page=500)
     return flat.select("position_title", "position_uri", "position_location", "position_remuneration")
 
 

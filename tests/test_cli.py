@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import json
 
-from usajobs_etl_service_spark.__main__ import demo_transport, main
+from usajobs_etl_service_spark.__main__ import build_parser, demo_transport, main
 from usajobs_etl_service_spark.sources import rest_api
 from usajobs_etl_service_spark.sources.rest_api import RestPageSource
 
@@ -43,6 +43,15 @@ def test_max_pages_env_caps_the_scan(spark, tmp_path, monkeypatch, capsys):
     assert main(["--table-path", str(tmp_path / "tbl"), "--demo-jobs", "1200"]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert (out["api_calls"], out["jobs_extracted"]) == (2, 1000)
+
+
+def test_master_defaults_to_the_session_factory(monkeypatch):
+    """Without SPARK_MASTER the CLI passes no master, so get_spark's
+    local[$SPARK_GRAFT_CPUS] default applies; SPARK_MASTER overrides it."""
+    monkeypatch.delenv("SPARK_MASTER", raising=False)
+    assert build_parser().parse_args([]).master is None
+    monkeypatch.setenv("SPARK_MASTER", "local[2]")
+    assert build_parser().parse_args([]).master == "local[2]"
 
 
 def test_live_source_waits_between_pages(spark, tmp_path, monkeypatch, capsys):

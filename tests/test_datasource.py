@@ -1,5 +1,5 @@
 """Native Python DataSource (spark.read.format) — partition planning,
-option pushdown, distributed page fetch, flatten integration."""
+page-size clamp, distributed page generation, flatten integration."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ def test_partition_per_page_and_row_counts(spark):
     register_rest_datasource(spark)
     raw = (
         spark.read.format("usajobs_rest")
-        .option("mode", "mock")
         .option("mock_total", 1200)
         .option("results_per_page", 500)
         .load()
@@ -46,7 +45,7 @@ def test_page_size_clamped(spark):
 
 
 def test_flattened_end_to_end(spark):
-    flat = read_rest_jobs(spark, mode="mock", mock_total=1200, results_per_page=500)
+    flat = read_rest_jobs(spark, mock_total=1200, results_per_page=500)
     assert flat.count() == 1200
     row = flat.filter(F.col("position_uri") == "https://www.usajobs.gov/job/42-0").first()
     assert row["position_title"] == "Data Engineer 0"

@@ -3,6 +3,7 @@ connection) and the version store's retention."""
 
 from __future__ import annotations
 
+from usajobs_etl_service_spark.operators.dedup import dedup_first_wins
 from usajobs_etl_service_spark.sinks.jdbc import build_upsert_sql, jdbc_upsert, upsert_partition
 from usajobs_etl_service_spark.sinks import snapshot
 
@@ -111,17 +112,17 @@ def test_jdbc_upsert_dedups_batch_by_key(spark):
     rows = [(f"u{i % 5}", f"t{i}", i) for i in range(20)]  # 5 distinct keys
     df = spark.createDataFrame(rows, "position_uri string, position_title string, seq long")
     stats = jdbc_upsert(df, table="job_postings", key="position_uri", batch_size=3,
-                        max_connections=4, connect=connect, order_col="seq")
+                        max_connections=4, connect=connect)
     assert stats["total"] == 5
     assert stats["inserted"] == 5 and stats["updated"] == 0
 
 
 def test_jdbc_upsert_writes_real_order_column(spark, tmp_path):
-    """drop_order_col=False round-trip: when the ordering column (here
-    extracted_at) IS a real table column, it must survive into the
-    written column list and the first-wins row per key must be the one
-    with the minimum ordering value. Executor-side SQL is captured
-    through the shared filesystem (local mode)."""
+    """The caller's first-wins dedup, then the write: the ordering
+    column (here extracted_at) is a real table column, so it must
+    survive into the written column list, and the row written per key
+    must be the one with the minimum ordering value. Executor-side SQL
+    is captured through the shared filesystem (local mode)."""
     import json
     import os
     import uuid
@@ -144,9 +145,10 @@ def test_jdbc_upsert_writes_real_order_column(spark, tmp_path):
     # 5 keys x 3 versions; version 0 has the smallest extracted_at
     rows = [(f"u{i % 5}", f"title-{i % 5}-v{i // 5}", 100 + (i // 5)) for i in range(15)]
     df = spark.createDataFrame(rows, "position_uri string, position_title string, extracted_at long")
+    batch = dedup_first_wins(df, ["position_uri"], "extracted_at")
     stats = jdbc_upsert(
-        df, table="job_postings", key="position_uri", batch_size=10,
-        max_connections=2, connect=connect, order_col="extracted_at", drop_order_col=False,
+        batch, table="job_postings", key="position_uri", batch_size=10,
+        max_connections=2, connect=connect,
     )
     assert stats["total"] == 5
 

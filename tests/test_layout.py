@@ -1,6 +1,6 @@
 """Z-order layout: Morton-code correctness on a hand grid, measured
-multi-dimension locality vs a single-column sort, repartition
-integrity, and the no-UDF/no-lambda plan posture."""
+multi-dimension locality vs a single-column sort, file-level ranges of
+a z-ordered write, and the no-UDF/no-lambda plan posture."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from usajobs_etl_service_spark.operators.layout import (
     layout_skipping_stats,
-    zorder_repartition,
     zorder_values,
 )
 
@@ -77,14 +76,6 @@ def test_zorder_buckets_are_tighter_than_single_column_sort(spark):
     assert max(avg_rng_x, avg_rng_y) < 0.9  # strictly better than full-span
 
 
-def test_zorder_repartition_preserves_rows_and_sets_partitions(spark):
-    g = _grid(spark, 16)
-    out = zorder_repartition(g, ["x", "y"], num_partitions=8, bits=4)
-    assert out.columns == ["x", "y"]
-    assert out.count() == 256
-    assert out.rdd.getNumPartitions() == 8
-
-
 def test_zorder_plan_is_pure_expression(spark):
     g = _grid(spark, 8)
     p = (
@@ -125,7 +116,10 @@ def test_zorder_parquet_files_have_tight_multi_dim_ranges(spark, tmp_path):
 
     g = _grid(spark, 64)
     zdir, xdir = str(tmp_path / "z"), str(tmp_path / "x")
-    zorder_repartition(g, ["x", "y"], num_partitions=8, bits=6).write.parquet(zdir)
+    zed = zorder_values(g, ["x", "y"], bits=6)
+    zed.repartitionByRange(8, "zval").sortWithinPartitions("zval").drop(
+        "zval"
+    ).write.parquet(zdir)
     g.repartitionByRange(8, F.col("x")).write.parquet(xdir)
 
     def file_ranges(path):

@@ -220,7 +220,6 @@ def run(outdir: str) -> None:
         "bucketed_join": _bucketed_join_smoke(spark),
         "persisted_intermediates_storage": _persist_storage_smoke(spark, outdir, big),
         "khop_bfs": _khop_smoke(spark),
-        "maintain_cli": _maintain_smoke(spark, outdir),
         "table_profile": _profile_smoke(spark, outdir),
         "distributed_order": _dist_order_smoke(spark, outdir, big),
         "queries": out,
@@ -678,10 +677,11 @@ def _triangle_smoke(spark) -> dict[str, dict]:
 
 
 def _zorder_smoke(spark) -> dict[str, dict]:
-    """q182's layout engine (operators/layout.zorder_repartition) on
-    synthetic 2-D data at 10M and 100M rows: the per-row cost is a
-    broadcast normalize + one generated interleave expression + ONE
-    range exchange, so time must scale ~linearly with rows. Recorded:
+    """q182's layout engine (operators/layout.zorder_values, then one
+    range exchange on the z-value) on synthetic 2-D data at 10M and
+    100M rows: the per-row cost is a broadcast normalize + one
+    generated interleave expression + ONE range exchange, so time must
+    scale ~linearly with rows. Recorded:
     wall time, time ratio, and the clustering QUALITY invariant (every
     output partition's z-span is disjoint from the others — checked at
     the small scale via per-partition zval min/max)."""
@@ -725,74 +725,6 @@ def _zorder_smoke(spark) -> dict[str, dict]:
         out["r100M"]["sec"] / max(out["r10M"]["sec"], 1e-9), 2
     )
     return out
-
-
-def _maintain_smoke(spark, outdir: str) -> dict:
-    """The lake-maintenance CLI (tools/maintain.zorder_rewrite +
-    profile sidecar) exercised at the smoke multiplier — a nightly-ops
-    tool's failure mode IS scale (VERDICT r8 #6). The big documents
-    corpus is staged as a 32-file unsorted table, z-order-rewritten on
-    (doc_id, n_chars), and profiled. Recorded: rewrite wall time,
-    files before/after, and the measured SKIPPING ratio — the fraction
-    of files a 5%-of-span n_chars band predicate must touch, before
-    vs after (before ~1.0: hash-placed files all span the full range)."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import input_file_name
-
-    from tools.maintain import profile_to_file, zorder_rewrite
-    from usajobs_etl_service_spark.session import read_table
-
-    tmp = tempfile.mkdtemp(prefix="smoke_maintain_")
-    table = os.path.join(tmp, "docs")
-    try:
-        read_table(spark, outdir, "documents").select(
-            "doc_id", "lang", "n_chars"
-        ).repartition(32).write.parquet(table)
-
-        def n_files() -> int:
-            return sum(1 for f in os.listdir(table) if f.endswith(".parquet"))
-
-        def touch_fraction() -> float:
-            spans = (
-                spark.read.parquet(table)
-                .select("n_chars", input_file_name().alias("f"))
-                .groupBy("f")
-                .agg(F.min("n_chars").alias("lo"), F.max("n_chars").alias("hi"))
-                .collect()
-            )
-            glo = min(r["lo"] for r in spans)
-            ghi = max(r["hi"] for r in spans)
-            b_lo = glo + 0.3 * (ghi - glo)
-            b_hi = b_lo + 0.05 * (ghi - glo)
-            hit = sum(1 for r in spans if r["lo"] <= b_hi and r["hi"] >= b_lo)
-            return round(hit / len(spans), 3)
-
-        files_before, frac_before = n_files(), touch_fraction()
-        t0 = time.perf_counter()
-        res = zorder_rewrite(spark, table, ["doc_id", "n_chars"], num_files=16, bits=12)
-        rewrite_sec = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        prof = profile_to_file(spark, table, ["doc_id", "lang", "n_chars"])
-        profile_sec = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        profile_to_file(spark, table, ["doc_id", "lang", "n_chars"], approx=True)
-        profile_approx_sec = round(time.perf_counter() - t0, 3)
-        return {
-            "rows": res["rows"],
-            "rewrite_sec": rewrite_sec,
-            "profile_sec": profile_sec,
-            "profile_approx_sec": profile_approx_sec,
-            "files_before": files_before,
-            "files_after": n_files(),
-            "files_touched_frac_before": frac_before,
-            "files_touched_frac_after": touch_fraction(),
-            "profiled_columns": prof["profiled_columns"],
-        }
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _skew_join_smoke(spark) -> dict:

@@ -97,7 +97,11 @@ def build_parser() -> argparse.ArgumentParser:
         default=None,
         help="number of runs (0 = forever); defaults to 1 without --interval-seconds, forever with it",
     )
-    p.add_argument("--master", default=os.environ.get("SPARK_MASTER", "local[*]"), help="Spark master")
+    p.add_argument(
+        "--master",
+        default=os.environ.get("SPARK_MASTER"),
+        help="Spark master (env SPARK_MASTER, default local[$SPARK_GRAFT_CPUS])",
+    )
     return p
 
 

@@ -7,9 +7,6 @@ new partition's PARTIAL aggregate into the maintained table. For
 distributive/algebraic aggregates (count, sum, min, max, and avg as
 sum/count) partials merge exactly: that is the same partial+final
 contract Spark's own HashAggregate uses, lifted to table granularity.
-
-Pairs with sinks/partitioned.py: recompute one day's partial, merge,
-dynamic-overwrite the maintained rollup.
 """
 
 from __future__ import annotations

@@ -18,11 +18,11 @@ Spark-first shape:
   rounding anywhere).
 - Bit interleave is ONE generated expression (sum of shift/mask
   terms), codegen'd in the scan stage — no UDF, no per-row Python.
-- ``zorder_repartition`` hands the z-value to ``repartitionByRange``:
-  ONE range exchange (sampled boundaries), after which each output
-  file covers a compact z-interval — which is exactly a small
-  hyper-rectangle set in the original column space. Writers then get
-  tight per-file min/max on EVERY z-dimension.
+- A writer hands the z-value to ``repartitionByRange``: ONE range
+  exchange (sampled boundaries), after which each output file covers a
+  compact z-interval — which is exactly a small hyper-rectangle set in
+  the original column space, so every z-dimension gets tight per-file
+  min/max.
 
 Reference basis: public Z-ordering literature and lakehouse docs
 (Morton curves for data skipping); no reference-repo counterpart —
@@ -155,9 +155,8 @@ def zorder_prepare(
     dates go through timestamp at the session timezone's midnight).
     Returns ``(df + one '<col>_zb' bigint column per entry, the new
     column names in input order)`` — feed the names straight to
-    ``zorder_values`` / ``zorder_repartition``; NULLs stay NULL (they
-    scale to the dimension minimum downstream, the documented
-    NULLS-FIRST convention).
+    ``zorder_values``; NULLs stay NULL (they scale to the dimension
+    minimum downstream, the documented NULLS-FIRST convention).
 
     Resolution only affects LAYOUT quality, not correctness: too-fine
     wastes z-bits on intra-file noise, too-coarse collapses files
@@ -195,26 +194,6 @@ def zorder_prepare(
     return out, names
 
 
-def zorder_repartition(
-    df: DataFrame,
-    cols: list[str],
-    *,
-    num_partitions: int,
-    bits: int = 16,
-) -> DataFrame:
-    """Physically cluster ``df`` into ``num_partitions`` z-ordered
-    partitions (ONE range exchange on the Morton code; write the result
-    partitioned to get per-file multi-column min/max locality). The
-    helper column is dropped — the layout is carried by partition
-    placement, as a writer wants it."""
-    zed = zorder_values(df, cols, bits=bits)
-    return (
-        zed.repartitionByRange(num_partitions, F.col("zval"))
-        .sortWithinPartitions("zval")
-        .drop("zval")
-    )
-
-
 def layout_skipping_stats(
     df: DataFrame,
     cols: list[str],
@@ -230,8 +209,8 @@ def layout_skipping_stats(
     prune files. Buckets are equal-size cuts of the exact global
     (zval, cols...) order via distributed_order.global_row_number (one
     materialized range exchange — never a single-task global window),
-    deterministic and oracle-replayable; the production path is
-    ``zorder_repartition``'s sampled range exchange."""
+    deterministic and oracle-replayable; a writer would instead take
+    ``repartitionByRange``'s sampled range exchange on the z-value."""
     from usajobs_etl_service_spark.operators.distributed_order import (
         global_row_number,
     )
@@ -279,8 +258,8 @@ def hilbert_attach(
     (every consecutive pair of Hilbert addresses is a UNIT step in
     (x, y); Morton jumps across the plane at power-of-two boundaries),
     at the cost of a stateful per-bit rotation Z-order doesn't need.
-    Use exactly like zorder_repartition's key: range-partition on the
-    index, and rectangle predicates touch few partitions.
+    Use exactly like the Morton z-value: range-partition on the index,
+    and rectangle predicates touch few partitions.
 
     Inputs must be integral in ``[0, 2^bits)`` — the same contract as
     the Morton interleave; ``zorder_prepare`` (fixed-point buckets) is

@@ -22,14 +22,14 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count
 def get_spark(
     app_name: str = "usajobs_etl_service_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a
-    cluster, pass ``None`` and submit via spark-submit with the cluster
-    master so this factory only sets SQL-level conf.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (``local[*]``
+    when that is unset); on a cluster, pass the cluster master (the CLI
+    takes it from ``--master`` / ``SPARK_MASTER``). Any other setting,
+    ``spark.sql.shuffle.partitions`` included, goes in ``extra_conf``.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -37,7 +37,7 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -47,11 +47,7 @@ __all__ = [
     "bucketize_write",
     "bucketized_table",
     "assert_no_exchange_on",
-    "write_bucket_spec",
-    "register_bucketed",
 ]
-
-SPEC_FILE = "_BUCKET_SPEC.json"
 
 
 def bucketize_write(
@@ -103,41 +99,3 @@ def assert_no_exchange_on(df: DataFrame) -> None:
         raise AssertionError(
             "expected a shuffle-free plan over bucketed inputs; plan:\n" + plan
         )
-
-
-def write_bucket_spec(path: str, bucket_col: str, n_buckets: int, schema_ddl: str) -> None:
-    """Record the bucket layout beside the data (underscore-prefixed —
-    parquet readers ignore it). The catalog entry bucketize_write
-    creates is session-scoped; the sidecar is what lets ANY later
-    session recover the no-shuffle property via
-    :func:`register_bucketed` — Spark reads bucket ids from the
-    ``part-*_NNNNN`` file names, so a re-registered external table
-    with the same spec over the same files buckets correctly."""
-    import json
-    import os
-
-    with open(os.path.join(path, SPEC_FILE), "w") as f:
-        json.dump(
-            {"bucket_col": bucket_col, "n_buckets": n_buckets, "schema": schema_ddl},
-            f,
-        )
-
-
-def register_bucketed(spark: SparkSession, table: str, path: str) -> DataFrame:
-    """Re-attach a bucketed layout written earlier (possibly by another
-    session / the maintenance CLI): reads the ``_BUCKET_SPEC.json``
-    sidecar and registers an external table with the recorded
-    CLUSTERED BY spec over the existing files."""
-    import json
-    import os
-
-    with open(os.path.join(path, SPEC_FILE)) as f:
-        spec = json.load(f)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(
-        f"CREATE TABLE {table} ({spec['schema']}) USING parquet "
-        f"CLUSTERED BY ({spec['bucket_col']}) "
-        f"INTO {spec['n_buckets']} BUCKETS "
-        f"LOCATION '{path}'"
-    )
-    return spark.table(table)

@@ -29,10 +29,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
-from usajobs_etl_service_spark.operators.dedup import dedup_first_wins
 
-
-def build_upsert_sql(table: str, columns: list[str], key: str, n_rows: int, *, touch_col: str | None = "updated_at") -> str:
+def build_upsert_sql(table: str, columns: list[str], key: str, n_rows: int) -> str:
     """One multi-row INSERT ... ON CONFLICT DO UPDATE statement with
     ``n_rows`` parameter tuples (reference SQL shape, etl.py:467-488)."""
     cols = ", ".join(columns)
@@ -40,8 +38,8 @@ def build_upsert_sql(table: str, columns: list[str], key: str, n_rows: int, *, t
     values = ", ".join([one_tuple] * n_rows)
     update_cols = [c for c in columns if c not in (key, "created_at")]
     sets = ", ".join(f"{c} = EXCLUDED.{c}" for c in update_cols)
-    if touch_col and touch_col not in columns:
-        sets += f", {touch_col} = CURRENT_TIMESTAMP"
+    if "updated_at" not in columns:
+        sets += ", updated_at = CURRENT_TIMESTAMP"
     return (
         f"INSERT INTO {table} ({cols}) VALUES {values} "
         f"ON CONFLICT ({key}) DO UPDATE SET {sets} "
@@ -100,28 +98,20 @@ def jdbc_upsert(
     max_connections: int = 8,
     connect: Callable | None = None,
     dsn: str | None = None,
-    order_col: str | None = None,
-    drop_order_col: bool = True,
 ) -> dict:
     """Distributed upsert of ``df`` into PostgreSQL ``table``. Returns
     ``{"inserted", "updated", "total"}`` (reference metrics shape).
 
-    The batch is deduped by ``key`` first (first-wins by ``order_col``
-    when given, reference etl.py:452-465): a key appearing twice in one
-    multi-VALUES statement makes PG abort with "ON CONFLICT DO UPDATE
-    command cannot affect row a second time", and duplicates split across
-    partitions would race on separate connections. ``repartition(key)``
-    additionally pins every occurrence of a key to one connection, so
-    concurrent partition writes never contend on the same row.
-
-    ``drop_order_col`` (default True) excludes ``order_col`` from the
-    written column list — the common case of a synthetic ordering column
-    (ingest_seq) that is not a table column. Pass ``drop_order_col=False``
-    when the ordering column (e.g. ``extracted_at``) IS a real column of
-    the target table and must be written."""
-    df = dedup_first_wins(df, [key], order_col) if order_col is not None else df.dropDuplicates([key])
-    if drop_order_col and order_col is not None and order_col in df.columns:
-        df = df.drop(order_col)
+    ``df`` is a key-unique batch, as ``merge_upsert`` takes: the caller
+    runs the first-wins dedup (``dedup_first_wins``, reference
+    etl.py:452-465). ``dropDuplicates([key])`` still guards the write: a
+    key appearing twice in one multi-VALUES statement makes PG abort with
+    "ON CONFLICT DO UPDATE command cannot affect row a second time", and
+    duplicates split across partitions would race on separate
+    connections. ``repartition(key)`` additionally pins every occurrence
+    of a key to one connection, so concurrent partition writes never
+    contend on the same row."""
+    df = df.dropDuplicates([key])
     columns = df.columns
 
     if connect is None:

@@ -1,30 +1,24 @@
-"""S1-S3 as a native PySpark DataSource (Python Data Source API,
+"""S1/S3 as a native PySpark DataSource (Python Data Source API,
 Spark 4): ``spark.read.format("usajobs_rest")`` with page-partition
-planning and option pushdown.
+planning.
 
 Two source flavors ship for the same API surface:
 
 - ``sources/rest_api.py`` — driver-side spool scan: the RIGHT shape for
   a rate-limited live API (one polite client, retry/breaker policies,
-  O(1-page) driver memory). Default for production ingest.
+  O(1-page) driver memory). The pipeline's ingest source, and the only
+  one that talks to the live API.
 - this module — a DataSourceV2-style reader where EACH PAGE IS AN INPUT
-  PARTITION fetched executor-side in parallel. The right shape for
-  bulk/mirrored endpoints with no rate limit (or per-partition token
-  buckets): scan width scales with the cluster, and Catalyst sees a
-  real source with options pushdown (S2) and partition planning (S3).
+  PARTITION, generated executor-side in parallel: scan width scales
+  with the cluster, and Catalyst sees a real source with partition
+  planning (S3). Pages are deterministic synthetic ones (seeded by
+  page number), so the distributed path runs with no network (q46).
 
-Pushdown options (S2 parity, reference etl.py:191-199): ``keyword``,
-``location``, ``results_per_page`` (clamped to 500), ``max_pages``.
-Partition planning (S3): a driver-side probe of page 1 reads
-``SearchResultCountAll`` and plans ``ceil(count_all/per_page)`` page
-partitions, capped by ``max_pages`` — the early-exit limit lives in the
-planner, not the executors.
-
-The ``mock`` mode generates deterministic synthetic pages executor-side
-(seeded by page number) so the full distributed path is testable with
-no network; a live deployment supplies ``base_url`` +
-``auth_header_json`` and the partition fetch uses the same retrying
-transport as the spool source.
+Options: ``mock_total`` (the result count the synthetic API reports,
+default 1200), ``results_per_page`` (clamped to 500) and ``max_pages``
+(default 20). Partition planning (S3) plans
+``ceil(mock_total/per_page)`` page partitions, capped by ``max_pages``
+— the early-exit limit lives in the planner, not the executors.
 
 Each partition yields ONE (page, json) row (q46's contract); the
 flatten runs in Spark (``read_rest_jobs``). Arrow batching does not pay
@@ -80,45 +74,20 @@ class PagePartition(InputPartition):
 
 class RestJobsReader(DataSourceReader):
     def __init__(self, options: dict):
-        self.options = options
         self.per_page = min(int(options.get("results_per_page", PAGE_SIZE_CAP)), PAGE_SIZE_CAP)
         self.max_pages = int(options.get("max_pages", 20))
-        self.mode = options.get("mode", "mock")
         self.total = int(options.get("mock_total", 1200))
 
     # -- S3: partition planning --------------------------------------------
     def partitions(self):
-        if self.mode == "mock":
-            count_all = self.total
-        else:  # pragma: no cover — live probe
-            probe = self._fetch(1)
-            count_all = probe.get("SearchResult", {}).get("SearchResultCountAll", 0)
-        n_pages = max((count_all + self.per_page - 1) // self.per_page, 0)
+        n_pages = max((self.total + self.per_page - 1) // self.per_page, 0)
         n_pages = min(n_pages, self.max_pages)
         return [PagePartition(p) for p in range(1, n_pages + 1)]
 
-    # -- S1: per-partition page fetch --------------------------------------
-    def _fetch(self, page: int) -> dict:
-        if self.mode == "mock":
-            return _mock_page(page, self.per_page, self.total)
-        # pragma: no cover — live transport (same policies as rest_api)
-        from usajobs_etl_service_spark.sources.rest_api import RetryPolicy, http_transport
-
-        transport = http_transport(
-            self.options["base_url"], json.loads(self.options.get("auth_header_json", "{}"))
-        )
-        params = {
-            "Keyword": self.options.get("keyword", ""),
-            "ResultsPerPage": self.per_page,
-            "Page": page,
-            "WhoMayApply": "All",
-        }
-        if self.options.get("location"):
-            params["LocationName"] = self.options["location"]
-        return RetryPolicy().call(lambda: transport(params))
-
+    # -- S1: per-partition page generation ---------------------------------
     def read(self, partition: PagePartition) -> Iterator:
-        yield (partition.page, json.dumps(self._fetch(partition.page)))
+        page = _mock_page(partition.page, self.per_page, self.total)
+        yield (partition.page, json.dumps(page))
 
 
 class RestJobsDataSource(DataSource):
