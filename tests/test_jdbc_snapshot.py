@@ -1,7 +1,13 @@
 """JDBC upsert writer (SQL generation + batching via fake DB-API
-connection) and the version store's retention."""
+connection) and the version store's retention and file layout."""
 
 from __future__ import annotations
+
+import math
+import os
+
+import pyarrow.parquet as pq
+from pyspark.sql import functions as F
 
 from usajobs_etl_service_spark.operators.dedup import dedup_first_wins
 from usajobs_etl_service_spark.sinks.jdbc import build_upsert_sql, jdbc_upsert, upsert_partition
@@ -97,10 +103,38 @@ def test_jdbc_upsert_distributed(spark):
 def test_snapshot_retention(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(snapshot, "KEEP_LAST", 3)
     base = str(tmp_path / "snaps")
-    names = [snapshot.write_version(spark, base, spark.range(n)) for n in (1, 2, 3, 4)]
+    names = [snapshot.write_version(spark, base, spark.range(n), ["id"]) for n in (1, 2, 3, 4)]
     assert names == sorted(names) and len(set(names)) == 4  # back-to-back writes never collide
     assert snapshot.list_versions(spark, base) == names[1:]  # oldest pruned
     assert spark.read.parquet(snapshot.latest_committed(spark, base)).count() == 4
+
+
+def test_snapshot_sizes_files_from_the_newest_version(spark, tmp_path):
+    """A version is ``ceil(B / maxPartitionBytes)`` files, ``B`` being the
+    newest committed version's bytes, and each file is sorted by the key."""
+    base = str(tmp_path / "sized")
+    n = 20_000
+    shuffled = spark.range(0, n, 1, 8).select(
+        (F.col("id") * 7919 % n).alias("id"), F.sha2(F.col("id").cast("string"), 256).alias("h")
+    )
+    snapshot.write_version(spark, base, shuffled, ["id"])
+    first = snapshot.latest_committed(spark, base)
+    assert len([f for f in os.listdir(first) if f.startswith("part-")]) == 1  # no base yet
+    size = sum(os.path.getsize(os.path.join(first, f)) for f in os.listdir(first) if not f.startswith("."))
+    conf = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(conf)
+    target = size // 3 + 1
+    spark.conf.set(conf, str(target))
+    try:
+        snapshot.write_version(spark, base, shuffled, ["id"])
+    finally:
+        spark.conf.set(conf, old)
+    newest = snapshot.latest_committed(spark, base)
+    parts = [os.path.join(newest, f) for f in os.listdir(newest) if f.startswith("part-")]
+    assert len(parts) == math.ceil(size / target) == 3
+    ids = [pq.read_table(p).column("id").to_pylist() for p in parts]
+    assert all(i == sorted(i) for i in ids)
+    assert sorted(x for i in ids for x in i) == list(range(n))
 
 
 def test_jdbc_upsert_dedups_batch_by_key(spark):
@@ -171,6 +205,6 @@ def test_snapshot_retention_with_file_uri(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(snapshot, "KEEP_LAST", 2)
     base = "file://" + str(tmp_path / "snaps_uri")
     for n in (1, 2, 3):
-        snapshot.write_version(spark, base, spark.range(n))
+        snapshot.write_version(spark, base, spark.range(n), ["id"])
     assert len(snapshot.list_versions(spark, base)) == 2
     assert spark.read.parquet(snapshot.latest_committed(spark, base)).count() == 3

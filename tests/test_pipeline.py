@@ -8,6 +8,7 @@ import shutil
 import tempfile
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from usajobs_etl_service_spark import pipeline as pipeline_mod
@@ -255,6 +256,20 @@ def test_legacy_partitioned_version_reads_back_then_is_rewritten_plain(spark, tm
     rows = p2.current_table().select("position_uri", "position_title", "created_at").collect()
     assert {r[0]: r[2] for r in rows} == created
     assert sorted(r[1] for r in rows if r[1].endswith(" II")) == [f"Data Engineer {i} II" for i in range(3)]
+
+
+def test_version_is_one_zstd_file_sorted_by_key(spark, tmp_path):
+    p = _pipeline(spark, tmp_path, [make_page(5, 0, 12), make_page(5, 5, 12), make_page(2, 10, 12)])
+    p.run()
+    p2 = _pipeline(spark, tmp_path, [_retitled(4, " II")])
+    assert p2.run().status == "success"
+    newest = snapshot.latest_committed(spark, p2.config.table_path)
+    (part,) = [os.path.join(newest, f) for f in os.listdir(newest) if f.startswith("part-")]
+    meta = pq.ParquetFile(part).metadata
+    chunks = [meta.row_group(g).column(c) for g in range(meta.num_row_groups) for c in range(meta.num_columns)]
+    assert {c.compression for c in chunks} == {"ZSTD"}
+    uris = pq.read_table(part, columns=["position_uri"]).column(0).to_pylist()
+    assert len(uris) == 12 and uris == sorted(uris)
 
 
 def test_current_table_starts_no_spark_job(spark, tmp_path):

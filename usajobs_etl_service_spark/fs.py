@@ -54,6 +54,15 @@ def exists(path: str, spark: SparkSession | None = None) -> bool:
     return bool(fs.exists(hpath))
 
 
+def dir_size_bytes(path: str, spark: SparkSession | None = None) -> int:
+    """Total bytes of the files under ``path``, from one
+    ``getContentSummary`` call (the local filesystem leaves out its
+    ``.crc`` checksum files)."""
+    spark = _active_spark(spark)
+    fs, hpath = _fs_and_path(spark, path)
+    return int(fs.getContentSummary(hpath).getLength())
+
+
 def write_file_atomic(path: str, data: bytes, spark: SparkSession | None = None) -> None:
     """Write ``data`` as the file ``path``: first to a ``_``-prefixed
     sibling, which Spark's file readers skip, then renamed into place, so

@@ -1,7 +1,7 @@
 """Incremental aggregate maintenance (extension operator, q134).
 
 Reference capability: the reference recomputes its stats views from the
-whole table on every run (/root/reference/etl/etl.py:563-607). At
+whole table on every run (etl.py:563-607). At
 100 TB you never re-scan history to refresh a rollup — you merge the
 new partition's PARTIAL aggregate into the maintained table. For
 distributive/algebraic aggregates (count, sum, min, max, and avg as

@@ -4,13 +4,14 @@
 Stage map (reference -> here):
   config resolve  -> PipelineConfig (env-backed)
   DDL             -> storage bootstrap (parquet dir / register views)
-  pre-stats       -> summary_stats on the current table
   scan loop       -> RestPageSource spool (S1-S3), deleted after the run
   flatten         -> flatten_postings (S4, P1-P3, F1-F7)
   dedup           -> dedup_first_wins on ingest_seq (A6)
   load            -> merge_upsert, metrics observed on the write (S6/J1/A8)
-  post-stats      -> summary_stats again
   run metrics     -> RunMetrics dataclass + etl_metadata append (A9)
+
+The summary stats (S7) are ``statistics()``, run on demand, not by
+``run()``.
 
 One materialization of the batch, then one write: ``jobs_extracted`` is
 observed on the first, the upsert's inserted/updated/total on the
@@ -69,7 +70,7 @@ class RunMetrics:
 
 
 class JobPipeline:
-    """Scan -> flatten -> dedup -> upsert -> stats, on a versioned parquet table.
+    """Scan -> flatten -> dedup -> upsert, on a versioned parquet table.
 
     The table is stored as plain parquet versions in the
     ``sinks/snapshot`` store; each run merges and writes a new version,
@@ -88,7 +89,7 @@ class JobPipeline:
         return snapshot.read_latest(self.spark, self.config.table_path, JOB_POSTING_SCHEMA)
 
     def _write_version(self, df: DataFrame) -> str:
-        return snapshot.write_version(self.spark, self.config.table_path, df)
+        return snapshot.write_version(self.spark, self.config.table_path, df, ["position_uri"])
 
     # -- run ----------------------------------------------------------------
 
@@ -105,9 +106,8 @@ class JobPipeline:
             fresh = dedup_first_wins(fresh, ["position_uri"], "ingest_seq").drop("ingest_seq")
             # materialized once (at most the source's max_pages x 500
             # rows), so the write does not recompute spool -> flatten ->
-            # dedup. localCheckpoint, not cache(): over a cached batch the
-            # write split a 29.5k-row table into 18 files instead of 11,
-            # with 1.66x the bytes (4 cores)
+            # dedup. localCheckpoint, not cache(): it runs at once, so
+            # jobs_extracted is read before the write
             observed, extracted = observe_counts(fresh, "batch")
             batch = observed.localCheckpoint()
             metrics.jobs_extracted = extracted.get["rows"]
