@@ -39,26 +39,35 @@ def graph():
     return edges, seeds
 
 
-def _frames(spark, graph):
+def _frames(spark, graph, id_type):
     edges, seeds = graph
-    e = spark.createDataFrame(edges, ["u", "v"])
-    s = spark.createDataFrame([(x,) for x in seeds], ["node"])
+    e = spark.createDataFrame(edges, f"u {id_type}, v {id_type}")
+    s = spark.createDataFrame([(x,) for x in seeds], f"node {id_type}")
     return e, s
 
 
-@pytest.mark.parametrize("hops", [0, 1, 3])
-def test_matches_python_bfs_both_paths(spark, graph, hops):
+@pytest.mark.parametrize(
+    "hops,id_type",
+    [
+        pytest.param(h, t, id=str(h) if t == "bigint" else f"{h}-{t}")
+        for t in ("bigint", "int")
+        for h in (0, 1, 3)
+    ],
+)
+def test_matches_python_bfs_both_paths(spark, graph, hops, id_type):
     edges, seeds = graph
-    e, s = _frames(spark, graph)
+    e, s = _frames(spark, graph, id_type)
     want = _py_bfs(edges, seeds, hops)
-    for threshold in (500_000, 0):  # driver path / forced distributed path
-        got = {
-            r["node"]: r["dist"]
-            for r in khop_distances(
-                e, s, max_hops=hops, small_graph_edges=threshold
-            ).collect()
-        }
-        assert got == want, f"threshold={threshold} hops={hops}"
+    # driver path (Arrow transfer, numpy BFS) / forced distributed path
+    small, dist = (
+        khop_distances(e, s, max_hops=hops, small_graph_edges=threshold)
+        for threshold in (500_000, 0)
+    )
+    assert small.schema == dist.schema
+    assert small.schema["node"].dataType.simpleString() == id_type
+    rows = small.collect()
+    assert sorted(rows) == sorted(dist.collect())
+    assert {r["node"]: r["dist"] for r in rows} == want
 
 
 def test_isolated_seed_reports_dist_zero(spark):
@@ -66,6 +75,14 @@ def test_isolated_seed_reports_dist_zero(spark):
     s = spark.createDataFrame([(42,), (1,)], ["node"])
     got = {r["node"]: r["dist"] for r in khop_distances(e, s, max_hops=2).collect()}
     assert got == {42: 0, 1: 0, 2: 1}
+
+
+def test_null_seed_is_dropped_on_both_paths(spark):
+    e = spark.createDataFrame([(1, 2)], "u bigint, v bigint")
+    s = spark.createDataFrame([(None,), (1,)], "node bigint")
+    for threshold in (500_000, 0):
+        got = khop_distances(e, s, max_hops=2, small_graph_edges=threshold).collect()
+        assert {r["node"]: r["dist"] for r in got} == {1: 0, 2: 1}, threshold
 
 
 def test_early_exit_equals_full_unroll(spark):

@@ -42,9 +42,13 @@ import os
 import shutil
 import tempfile
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 from pyspark.storagelevel import StorageLevel
+
+from usajobs_etl_service_spark.operators.superstep import from_numpy, to_numpy
 
 
 def _large_star(nbrs: DataFrame, p: int) -> DataFrame:
@@ -98,37 +102,36 @@ def _small_star(edges: DataFrame, p: int) -> DataFrame:
     )
 
 
-def _driver_union_find(spark, edge_rows) -> DataFrame:
-    """Path-compressed union-by-min over an ALREADY-COLLECTED edge list
-    — the finish for graphs whose MEASURED edge count fits trivially in
-    driver memory (a few MB of id pairs), where per-round Spark fixed
-    costs exceed the total work. Takes driver-side rows, not a
-    DataFrame: the caller's path-decision ``limit().collect()`` already
-    holds every edge, so re-scanning (the r6 shape: two
-    ``toLocalIterator`` passes = one sequential mini-job PER PARTITION,
-    the measured bulk of q64's local regression) would pay Spark
-    round-trips for data the driver owns. The node set is derived from
-    the edges in-memory for the same reason."""
-    parent: dict[int, int] = {}
+def _driver_union_find(spark, a: np.ndarray, b: np.ndarray) -> DataFrame:
+    """Union-by-min over an ALREADY-TRANSFERRED edge list — the finish
+    for graphs whose MEASURED edge count fits trivially in driver
+    memory (a few MB of id pairs), where per-round Spark fixed costs
+    exceed the total work. Takes the caller's numpy columns, not a
+    DataFrame: the path-decision probe already holds every edge, so
+    re-scanning (the r6 shape: two ``toLocalIterator`` passes = one
+    sequential mini-job PER PARTITION, the measured bulk of q64's local
+    regression) would pay Spark round-trips for data the driver owns.
+    The node set is derived from the edges for the same reason.
 
-    def find(x: int) -> int:
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:  # path compression
-            parent[x], x = root, parent[x]
-        return root
-
-    nodes: set[int] = set()
-    for a, b in edge_rows:
-        nodes.add(a)
-        nodes.add(b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-    rows = [(int(n), int(find(n))) for n in nodes]
-    return spark.createDataFrame(rows, "doc_id long, cluster_id long")
+    Vectorized: each round hooks, for every edge, the larger of its two
+    roots under the smaller, then compresses every path to its root
+    (pointer jumping). A parent is always a smaller node of the same
+    component, so at the fixpoint (no edge joins two roots) every
+    component hangs off its minimum id."""
+    nodes, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ia, ib = idx[: len(a)], idx[len(a) :]
+    root = np.arange(len(nodes))
+    while True:
+        ra, rb = root[ia], root[ib]
+        nxt = root.copy()
+        np.minimum.at(nxt, np.maximum(ra, rb), np.minimum(ra, rb))
+        while not np.array_equal(nxt[nxt], nxt):
+            nxt = nxt[nxt]
+        if np.array_equal(nxt, root):
+            break
+        root = nxt
+    schema = StructType([StructField("doc_id", LongType()), StructField("cluster_id", LongType())])
+    return from_numpy(spark, schema, [nodes, nodes[root]])
 
 
 def connected_components(
@@ -204,9 +207,9 @@ def connected_components(
 
     # Small-graph finish: below the threshold the per-round fixed costs
     # (plan analysis, codegen, materialization, driver action — ~1s/round
-    # regardless of data size) dwarf the actual work, so collect once and
+    # regardless of data size) dwarf the actual work, so transfer once and
     # union-find on the driver. The threshold is measured, not guessed —
-    # and the MEASUREMENT IS THE COLLECT (r7): one limit(threshold+1)
+    # and the MEASUREMENT IS THE TRANSFER (r7): one limit(threshold+1)
     # job both decides the path and, when it fits, already holds every
     # edge for the union-find, replacing r6's fingerprint job + two
     # per-partition toLocalIterator passes (the profiled q64 regression)
@@ -215,12 +218,12 @@ def connected_components(
     # Spark's own posture of finishing small sides locally (broadcast
     # joins).
     if small_graph_edges > 0:
-        probe = edges.select("a", "b").limit(small_graph_edges + 1).collect()
-        if len(probe) <= small_graph_edges:
-            labels = _driver_union_find(spark, probe)
+        a, b = to_numpy(edges.select("a", "b").limit(small_graph_edges + 1))
+        if len(a) <= small_graph_edges:
+            labels = _driver_union_find(spark, a, b)
             edges.unpersist()  # labels is driver-built — no lineage on edges
             return (labels, 0) if return_rounds else labels
-        del probe
+        del a, b
 
     n0 = fingerprint(edges)[0]  # also materializes the persisted edges
     p = clamp(n0)

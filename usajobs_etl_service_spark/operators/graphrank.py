@@ -21,9 +21,12 @@ at the end — the q62 cross-engine float contract.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from usajobs_etl_service_spark.operators.superstep import from_numpy, to_numpy
 
 
 def pagerank(
@@ -500,13 +503,14 @@ def kcore_membership(
     (plan analysis, parquet round-trip, driver action) dwarf the work.
     The gate persists the distinct edge set and routes on ONE exact
     count — a pass the distributed path needs anyway to seed round 0,
-    and the small path's collect then reads straight from cache, so
+    and the small path's Arrow transfer then reads straight from cache, so
     the gate costs ZERO extra passes at any size (round-11 ADVICE
     class: the old ``limit(threshold+1).collect()`` probe ran the full
     dedup shuffle AND shipped threshold+1 rows to the driver just to
     discard them on big graphs). The cache is released before return
-    on both paths. ``small_graph_edges=0`` forces the distributed
-    path (tests do).
+    on both paths. The finish moves the edges in one Arrow transfer
+    and peels with numpy (``superstep.to_numpy``/``from_numpy``).
+    ``small_graph_edges=0`` forces the distributed path (tests do).
     """
     import atexit
     import os
@@ -526,22 +530,16 @@ def kcore_membership(
 
     if small_graph_edges > 0:
         if e.count() <= small_graph_edges:
-            probe = e.collect()
+            a, b = to_numpy(e)
             e.unpersist()
-            live = {(r["u"], r["v"]) for r in probe}
             for _ in range(rounds):
-                deg: dict = {}
-                for a, b in live:
-                    deg[a] = deg.get(a, 0) + 1
-                    deg[b] = deg.get(b, 0) + 1
-                drop = {n for n, d in deg.items() if d < k}
-                if not drop:
+                nodes, deg = np.unique(np.concatenate([a, b]), return_counts=True)
+                drop = nodes[deg < k]
+                if drop.size == 0:
                     break
-                live = {(a, b) for a, b in live if a not in drop and b not in drop}
-            deg = {}
-            for a, b in live:
-                deg[a] = deg.get(a, 0) + 1
-                deg[b] = deg.get(b, 0) + 1
+                live = ~(np.isin(a, drop) | np.isin(b, drop))
+                a, b = a[live], b[live]
+            nodes, deg = np.unique(np.concatenate([a, b]), return_counts=True)
             from pyspark.sql.types import LongType, StructField, StructType
 
             schema = StructType(
@@ -550,7 +548,7 @@ def kcore_membership(
                     StructField("core_degree", LongType(), False),
                 ]
             )
-            return spark.createDataFrame(sorted(deg.items()), schema)
+            return from_numpy(spark, schema, [nodes, deg])
 
     base = checkpoint_dir or tempfile.mkdtemp(prefix="kcore_rounds_")
     if checkpoint_dir:
@@ -737,12 +735,16 @@ def khop_distances(
     Small-graph finish (the kcore_membership posture, same
     threshold): the gate persists the distinct edge set and routes on
     ONE exact count — a pass the distributed path needs anyway for
-    the symmetrized edge cache, and the small path's collect then
+    the symmetrized edge cache, and the small path's Arrow transfer then
     reads straight from cache, so the gate costs ZERO extra passes at
     any size. The cache is released before return on both paths.
+    The finish moves the edges in one Arrow transfer and runs the BFS
+    as numpy frontier steps (``superstep.to_numpy``/``from_numpy``);
+    its ``node`` type is the distributed path's.
     ``small_graph_edges=0`` forces the distributed path (tests do).
     ``seeds``' first column is the seed node set; seeds absent from
-    the graph still report dist 0 (a seed is trivially reachable).
+    the graph still report dist 0 (a seed is trivially reachable), and
+    null seeds are dropped (a null names no node).
     """
     import atexit
     import os
@@ -753,7 +755,7 @@ def khop_distances(
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
     spark = edges.sparkSession
     seed_col = seeds.columns[0]
-    s = seeds.select(F.col(seed_col).alias("node")).distinct()
+    s = seeds.select(F.col(seed_col).alias("node")).dropna().distinct()
 
     e = (
         edges.select(F.col(u).alias("u"), F.col(v).alias("v"))
@@ -769,34 +771,30 @@ def khop_distances(
         # on the sf0.1 co-purchase graph — and the small path then
         # deduped AGAIN for the collect)
         if e.count() <= small_graph_edges:
-            probe = e.collect()
+            eu, ev = to_numpy(e)
             e.unpersist()
-            adj: dict = {}
-            for r in probe:
-                adj.setdefault(r["u"], set()).add(r["v"])
-                adj.setdefault(r["v"], set()).add(r["u"])
-            dist = {r["node"]: 0 for r in s.collect()}
-            frontier = set(dist)
+            src, dst = np.concatenate([eu, ev]), np.concatenate([ev, eu])
+            (seen,) = to_numpy(s)
+            nodes, dists = [seen], [np.zeros(len(seen), np.int32)]
+            frontier = seen
             for d in range(1, max_hops + 1):
-                nxt = set()
-                for n in frontier:
-                    for m in adj.get(n, ()):
-                        if m not in dist:
-                            dist[m] = d
-                            nxt.add(m)
-                if not nxt:
+                reached = np.unique(dst[np.isin(src, frontier)])
+                reached = np.setdiff1d(reached, seen, assume_unique=True)
+                if reached.size == 0:
                     break
-                frontier = nxt
+                nodes.append(reached)
+                dists.append(np.full(len(reached), d, np.int32))
+                seen = np.union1d(seen, reached)
+                frontier = reached
+            # the distributed path's node type: the seed and edge
+            # types as its union widens them
+            node_type = s.unionByName(e.select(F.col("u").alias("node"))).schema["node"].dataType
             from pyspark.sql.types import IntegerType, StructField, StructType
 
-            node_type = e.schema["u"].dataType if probe else s.schema["node"].dataType
             schema = StructType(
-                [
-                    StructField("node", node_type, True),
-                    StructField("dist", IntegerType(), False),
-                ]
+                [StructField("node", node_type, True), StructField("dist", IntegerType(), True)]
             )
-            return spark.createDataFrame(sorted(dist.items()), schema)
+            return from_numpy(spark, schema, [np.concatenate(nodes), np.concatenate(dists)])
 
     base = tempfile.mkdtemp(prefix="khop_rounds_")
     atexit.register(shutil.rmtree, base, ignore_errors=True)
